@@ -279,12 +279,13 @@ def wait_for_idle(max_wait: float) -> tuple[list[float], bool, float]:
 def warm_suite(spark, names: list[str]) -> None:
     """Run every headline plan once at the smallest sf so whole-stage-
     codegen classes and parquet footers are compiled/cached before
-    timing — the bench measures steady-state throughput, not JIT."""
+    timing — the bench measures steady-state throughput, not JIT. A query
+    that fails here fails the bench, named — never replaced by another."""
     for name in names:
         try:
             QUERIES[name].fn(spark, WARM_DIR).count()
-        except Exception:
-            QUERIES["pricing_summary"].fn(spark, WARM_DIR).count()
+        except Exception as e:
+            raise RuntimeError(f"warm-up failed for query {name!r}: {e}") from e
 
 
 def run_spark_suite(spark, names: list[str], sf_dir: str, reps: int = 2) -> dict[str, float]:

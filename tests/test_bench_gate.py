@@ -5,6 +5,8 @@ recorded 1.604x under loadavg 8.47; the idle truth was 1.12x)."""
 
 from __future__ import annotations
 
+import pytest
+
 import bench
 
 
@@ -197,3 +199,31 @@ def test_aliased_realistic_line_keeps_1dp_and_all_context():
     for n in ("doc_dedup_clusters", "lifecycle_similar_shards",
               "two_stage_similarity", "bpe_train_merges"):
         assert n in parsed["queries"]
+
+
+def test_warm_suite_names_the_failing_query_and_runs_no_substitute(monkeypatch):
+    from types import SimpleNamespace
+
+    ran = []
+
+    class _Counted:
+        def __init__(self, name):
+            self.name = name
+
+        def count(self):
+            ran.append(self.name)
+            return 1
+
+    def broken(spark, sf_dir):
+        raise ValueError("plan build exploded")
+
+    registry = {
+        "ok_query": SimpleNamespace(fn=lambda spark, sf_dir: _Counted("ok_query")),
+        "broken_query": SimpleNamespace(fn=broken),
+        "pricing_summary": SimpleNamespace(fn=lambda spark, sf_dir: _Counted("pricing_summary")),
+    }
+    monkeypatch.setattr(bench, "QUERIES", registry)
+    with pytest.raises(RuntimeError, match="broken_query") as exc:
+        bench.warm_suite(None, ["ok_query", "broken_query", "pricing_summary"])
+    assert isinstance(exc.value.__cause__, ValueError)
+    assert ran == ["ok_query"], "a failed warm-up must not run another query in its place"

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from tlmc_etl_spark.operators.group_similarity import (
     estimate_chunk_weights_numpy,
     three_scores_numpy,
-    weighted_chamfer_numpy,
 )
 from tlmc_etl_spark.operators.vectors import chamfer_numpy
 from tlmc_etl_spark.plans import QUERIES
@@ -202,14 +201,14 @@ class TestChunkIDF:
         rng = np.random.default_rng(11)
         A, B = rng.standard_normal((6, 16)), rng.standard_normal((9, 16))
         plain = chamfer_numpy(A, B)
-        w = weighted_chamfer_numpy(A, B, np.ones(6), np.ones(9))
-        assert abs(plain - w) < 1e-12
+        w = chamfer_numpy(A, B, np.ones(6), np.ones(9))
+        assert plain == w
 
     def test_weighted_chamfer_downweights_generic_chunk(self):
         rng = np.random.default_rng(12)
         B = rng.standard_normal((8, 16))
         # query: one chunk identical to a B chunk (match=1), one orthogonal-ish
         A = np.stack([B[0], rng.standard_normal(16)])
-        lo = weighted_chamfer_numpy(A, B, np.array([0.1, 1.0]), None)
-        hi = weighted_chamfer_numpy(A, B, np.array([1.0, 0.1]), None)
+        lo = chamfer_numpy(A, B, np.array([0.1, 1.0]), None)
+        hi = chamfer_numpy(A, B, np.array([1.0, 0.1]), None)
         assert lo < hi

@@ -7,6 +7,7 @@ from __future__ import annotations
 import duckdb
 import numpy as np
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from tlmc_etl_spark.operators.vectors import chamfer_numpy
@@ -241,7 +242,6 @@ def test_weighted_two_stage_matches_numpy_composition(spark, sf_dir, numpy_ref):
     # engine computed is taken as input and the weighted rerank itself is
     # verified end to end (the weight computation has its own oracle via
     # chunk_idf_weights)
-    from tlmc_etl_spark.operators.group_similarity import weighted_chamfer_numpy
     from tlmc_etl_spark.plans import QUERIES
 
     chunk_sets, pooled = numpy_ref
@@ -270,7 +270,7 @@ def test_weighted_two_stage_matches_numpy_composition(spark, sf_dir, numpy_ref):
     max_err = 0.0
     for r in got:
         A, B = chunk_sets[r["anchor"]], chunk_sets[r["neighbor"]]
-        ref = weighted_chamfer_numpy(A, B, w_of[r["anchor"]], w_of[r["neighbor"]])
+        ref = chamfer_numpy(A, B, w_of[r["anchor"]], w_of[r["neighbor"]])
         max_err = max(max_err, abs(r["score"] - ref))
     assert max_err < 5e-3, f"weighted rerank drifted {max_err} from numpy"
 
@@ -313,3 +313,51 @@ def test_n_known_threads_through_without_a_count_job(spark, monkeypatch):
     assert not count_calls, (
         f"recall stage ran {len(count_calls)} count() job(s) despite n_known"
     )
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_rerank_rejects_duplicate_chunk_set_rows(spark, weighted):
+    """chunk_sets is one row per track. A duplicated anchor row must fail
+    loudly and name the anchor, not score only its first copy — an
+    explicit raise, so the check also holds under `python -O`."""
+    from pyspark.errors import PythonException
+
+    from tlmc_etl_spark.pipelines.similarity import chamfer_rerank
+
+    sets = spark.createDataFrame(
+        [(t, [[1.0, float(t)], [float(t), 1.0]], [1.0, 0.5]) for t in (1, 2, 3)],
+        "track long, chunk_set array<array<double>>, chunk_weights array<double>",
+    )
+    if not weighted:
+        sets = sets.drop("chunk_weights")
+    recall = spark.createDataFrame(
+        [(1, 2, 0.9), (1, 3, 0.8), (2, 1, 0.9), (3, 1, 0.7)],
+        "anchor long, neighbor long, recall_score double",
+    )
+    assert chamfer_rerank(recall, sets, 2).count() == 4
+    dup = sets.unionByName(sets.filter("track = 1"))
+    with pytest.raises(PythonException, match="ValueError: chunk_sets has 2 rows for anchor 1"):
+        chamfer_rerank(recall, dup, 2).collect()
+
+
+@pytest.mark.xfail(
+    strict=True,
+    raises=Py4JJavaError,
+    reason="a chunk_sets track with no recall pairs leaves the cogroup's "
+    "pairs side empty for that key, and the Python worker crashes while "
+    "Arrow-converting the batch; until fixed, every track must be a recall anchor",
+)
+def test_rerank_skips_an_anchor_without_recall_pairs(spark):
+    from tlmc_etl_spark.pipelines.similarity import chamfer_rerank
+
+    sets = spark.createDataFrame(
+        [(t, [[1.0, float(t)], [float(t), 1.0]]) for t in (1, 2, 3)],
+        "track long, chunk_set array<array<double>>",
+    )
+    # track 3 is a neighbor but never an anchor
+    recall = spark.createDataFrame(
+        [(1, 2, 0.9), (1, 3, 0.8), (2, 1, 0.9)],
+        "anchor long, neighbor long, recall_score double",
+    )
+    got = chamfer_rerank(recall, sets, 2).select("anchor", "neighbor").collect()
+    assert sorted(tuple(r) for r in got) == [(1, 2), (1, 3), (2, 1)]

@@ -506,3 +506,23 @@ class TestShardFileOrdering:
             rows = list(csv.reader(open(f)))[1:]
             keys = [(r[0], int(r[2])) for r in rows]
             assert keys == sorted(keys), f"unordered shard file {f}"
+
+
+class TestEventsLoader:
+    def test_nanos_events_load_as_micro_timestamps(self, spark, tmp_path):
+        """TIMESTAMP(NANOS) events load through the nanosAsLong flag that
+        get_spark sets once; the loader truncates them to microseconds."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from tlmc_etl_spark.sources.tables import load_table
+
+        ns = np.array([1704067798778549123, 1704068166738090456], dtype="datetime64[ns]")
+        pq.write_table(
+            pa.table({"event_id": pa.array([1, 2], pa.int64()), "ts": pa.array(ns)}),
+            tmp_path / "events.parquet",
+        )
+        df = load_table(spark, str(tmp_path), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got = df.select(F.unix_micros("ts").alias("us")).orderBy("us").collect()
+        assert [r["us"] for r in got] == [1704067798778549, 1704068166738090]

@@ -160,7 +160,9 @@ def minhash_near_dupes(
     # before the persist: the downstream band explode and estimate join
     # are JVM bytes-proportional stages, and re-widening the tiny cached
     # table costs an extra exchange that measured ~2x end-to-end at sf0.1
-    # (round-4 A/B, tools/ab_minhash.py) — AQE re-widens at real scale.
+    # (round-3 bench 2.56 s -> 1.34-1.58 s after removing the fanout; a
+    # round-4 same-session A/B confirmed the fanout was the cause) — AQE
+    # re-widens at real scale.
     sigs = minhash_signatures(sh, id_col, n_hashes).persist()
     pairs = lsh_candidate_pairs(sigs, id_col, n_bands, rows)
     est = minhash_estimate(sigs, pairs, id_col)

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from tlmc_etl_spark.operators.vectors import chunk_matrix
 from tlmc_etl_spark.tuning import fanout
 
 
@@ -93,26 +94,6 @@ def estimate_chunk_weights_numpy(
         return np.ones(Q.shape[0])
     z = (generic - generic.mean()) / spread
     return 1.0 / (1.0 + np.exp(strength * z))
-
-
-def weighted_chamfer_numpy(
-    A: np.ndarray, B: np.ndarray, wa: np.ndarray | None = None, wb: np.ndarray | None = None
-) -> float:
-    """Symmetric chamfer with per-chunk weights on the mean of each side
-    (rerank.py:60-90: weighted q_side, plain-or-weighted d_side)."""
-    An, Bn = _unit(np.asarray(A, dtype=np.float64)), _unit(np.asarray(B, dtype=np.float64))
-    sims = An @ Bn.T
-    if wa is None:
-        q_side = sims.max(axis=1).mean()
-    else:
-        wa = np.asarray(wa, dtype=np.float64)
-        q_side = (sims.max(axis=1) * wa).sum() / wa.sum()
-    if wb is None:
-        d_side = sims.max(axis=0).mean()
-    else:
-        wb = np.asarray(wb, dtype=np.float64)
-        d_side = (sims.max(axis=0) * wb).sum() / wb.sum()
-    return float(0.5 * (q_side + d_side))
 
 
 # ------------------------------------------------------------- spark plans
@@ -193,10 +174,7 @@ def calibrate_pair_gamma(
         for pdf in batches:
             out = [
                 pd.DataFrame({
-                    "d": (1.0 - (
-                        _unit(np.stack([np.asarray(v, dtype=np.float64) for v in va]))
-                        @ _unit(np.stack([np.asarray(v, dtype=np.float64) for v in vb])).T
-                    )).ravel()
+                    "d": (1.0 - _unit(chunk_matrix(va)) @ _unit(chunk_matrix(vb)).T).ravel()
                 })
                 for va, vb in zip(pdf["vecs_a"], pdf["vecs_b"])
             ]
@@ -260,11 +238,7 @@ def three_score_group_similarity(
         # zip over columns, not iterrows (per-row Series construction cost)
         for pdf in batches:
             out = [
-                (ga, gb, *three_scores_numpy(
-                    np.stack([np.asarray(v, dtype=np.float64) for v in va]),
-                    np.stack([np.asarray(v, dtype=np.float64) for v in vb]),
-                    dup_thresh, g,
-                ))
+                (ga, gb, *three_scores_numpy(chunk_matrix(va), chunk_matrix(vb), dup_thresh, g))
                 for ga, gb, va, vb in zip(
                     pdf["group_a"], pdf["group_b"], pdf["vecs_a"], pdf["vecs_b"]
                 )

@@ -19,17 +19,36 @@ from pyspark.sql import functions as F
 from tlmc_etl_spark.tuning import fanout
 
 
-def chamfer_numpy(A: np.ndarray, B: np.ndarray) -> float:
+def chunk_matrix(cells) -> np.ndarray:
+    """Stack an Arrow list-of-vectors cell into a float64 row matrix.
+    float->double widening is exact, so float32 payloads score
+    bit-identically to double ones."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in cells])
+
+
+def chamfer_numpy(
+    A: np.ndarray, B: np.ndarray, wa: np.ndarray | None = None, wb: np.ndarray | None = None
+) -> float:
     """Symmetric chamfer (mean-of-max cosine) between two chunk sets.
 
     Reference formula: mean over A-chunks of max cosine against B, averaged
     with the transpose direction (rerank.py:47-116). Inputs are row-wise
     vectors; normalization is applied here so callers can pass raw chunks.
+    Optional chunk-IDF weights `wa`/`wb` turn a side's mean into a
+    weighted mean (rerank.py:60-90); an unweighted side stays a plain
+    `.mean()`, and all-ones weights give the plain score bit for bit.
     """
     An = A / np.linalg.norm(A, axis=1, keepdims=True)
     Bn = B / np.linalg.norm(B, axis=1, keepdims=True)
     sim = An @ Bn.T
-    return float((sim.max(axis=1).mean() + sim.max(axis=0).mean()) / 2.0)
+    return float((_side_mean(sim.max(axis=1), wa) + _side_mean(sim.max(axis=0), wb)) / 2.0)
+
+
+def _side_mean(best: np.ndarray, w: np.ndarray | None) -> float:
+    if w is None:
+        return best.mean()
+    w = np.asarray(w, dtype=np.float64)
+    return (best * w).sum() / w.sum()
 
 
 def centroid_topk_pairs(
@@ -104,10 +123,7 @@ def chamfer_group_scores(
         # per row; the per-row work is already one bounded matmul
         for pdf in batches:
             out = [
-                (ga, gb, round(chamfer_numpy(
-                    np.stack([np.asarray(v, dtype=np.float64) for v in va]),
-                    np.stack([np.asarray(v, dtype=np.float64) for v in vb]),
-                ), 6))
+                (ga, gb, round(chamfer_numpy(chunk_matrix(va), chunk_matrix(vb)), 6))
                 for ga, gb, va, vb in zip(
                     pdf["group_a"], pdf["group_b"], pdf["vecs_a"], pdf["vecs_b"]
                 )

@@ -19,7 +19,10 @@ Spark shapes:
    work, recall floor property-gated).
  - rerank: chunk sets gathered per track with a hard cap (the reference
    pads/subsamples at 96 chunks, precompute_similar_tracks.py:84-92 — the
-   cap IS the scale contract), pairs scored in applyInPandas.
+   cap IS the scale contract), pairs scored in applyInPandas. Chunk-IDF
+   weights are optional data on the same path: gather_chunks(weight_col=)
+   adds an aligned `chunk_weights` column, and chamfer_rerank weights
+   both sides whenever that column is present (rerank.py:60-90).
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from tlmc_etl_spark.operators.vectors import chamfer_numpy
+from tlmc_etl_spark.operators.vectors import chamfer_numpy, chunk_matrix
 from tlmc_etl_spark.tuning import fanout
 
 
@@ -217,6 +220,7 @@ def gather_chunks(
     vec_col: str,
     cap: int = 96,
     order_col: str | None = None,
+    weight_col: str | None = None,
 ) -> DataFrame:
     """(track, chunk matrix as array<array<double>>), capped at `cap`
     chunks per track — the pad/subsample contract.
@@ -226,29 +230,44 @@ def gather_chunks(
     Without one, the fallback orders by xxhash64 of the vector content —
     still layout-independent, unlike a monotonically_increasing_id, which
     depends on partition layout and made rerank scores drift across
-    repartitions (the engine's determinism rule forbids that)."""
+    repartitions (the engine's determinism rule forbids that).
+
+    With `weight_col` (the chunk-IDF weight, joined onto the chunks by
+    the caller) the output also carries `chunk_weights`, aligned with
+    `chunk_set`: vector and weight collect through one sorted struct, so
+    weight i always belongs to chunk i."""
     order = F.col(order_col) if order_col else F.xxhash64(F.col(vec_col))
     w = W.partitionBy(track_col).orderBy(order)
     capped = (
         chunks.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= cap)
-        .drop("__rn")
     )
     # No cast to array<double> here: the chunk matrix is the similarity
     # pipeline's heaviest payload, and float->double widening is EXACT, so
-    # the scorers' np.asarray(..., dtype=np.float64) produces bit-identical
-    # matrices from the float32 columns while the gather shuffle, the pair
-    # rows and the Arrow transfer all ship HALF the bytes (the
-    # _with_unit_norm idiom, operators/vectors.py). An already-double
-    # input stays double — same values either way.
-    return capped.groupBy(F.col(track_col).alias("track")).agg(
-        F.collect_list(F.col(vec_col)).alias("chunk_set")
+    # the scorers' chunk_matrix produces bit-identical float64 matrices
+    # from the float32 columns while the gather shuffle, the pair rows and
+    # the Arrow transfer all ship HALF the bytes (the _with_unit_norm
+    # idiom, operators/vectors.py). An already-double input stays double —
+    # same values either way.
+    by_track = capped.groupBy(F.col(track_col).alias("track"))
+    if weight_col is None:
+        return by_track.agg(F.collect_list(F.col(vec_col)).alias("chunk_set"))
+    ovw = F.struct(
+        F.col("__rn").alias("o"), F.col(vec_col).alias("v"), F.col(weight_col).alias("w")
+    )
+    return by_track.agg(F.array_sort(F.collect_list(ovw)).alias("ovw")).select(
+        "track",
+        F.expr("transform(ovw, s -> s.v)").alias("chunk_set"),
+        F.expr("transform(ovw, s -> s.w)").alias("chunk_weights"),
     )
 
 
 def chamfer_rerank(recall: DataFrame, chunk_sets: DataFrame, k_final: int) -> DataFrame:
     """Score recall pairs with symmetric chamfer over chunk sets, keep the
-    per-anchor top k_final with dense 1-based ranks.
+    per-anchor top k_final with dense 1-based ranks. When `chunk_sets`
+    carries `chunk_weights` (gather_chunks with a weight column), both
+    sides are chunk-IDF weighted — the reference's full rerank form
+    (rerank.py:60-90).
 
     Data movement (the §8 rule: shuffles should move lightweight proxies,
     payloads once): only the NEIGHBOR-side chunk matrix is attached to
@@ -261,8 +280,16 @@ def chamfer_rerank(recall: DataFrame, chunk_sets: DataFrame, k_final: int) -> Da
     `cb` through two joins plus the fanout exchange.) Per-pair arithmetic
     is unchanged, so scores are bit-identical.
     """
-    b_side = chunk_sets.select(F.col("track").alias("neighbor"), F.col("chunk_set").alias("cb"))
-    a_side = chunk_sets.select(F.col("track").alias("anchor"), F.col("chunk_set").alias("ca"))
+    weighted = "chunk_weights" in chunk_sets.columns
+
+    def side(key: str, c: str, w: str) -> DataFrame:
+        cols = [F.col("track").alias(key), F.col("chunk_set").alias(c)]
+        if weighted:
+            cols.append(F.col("chunk_weights").alias(w))
+        return chunk_sets.select(*cols)
+
+    b_side = side("neighbor", "cb", "wb")
+    a_side = side("anchor", "ca", "wa")
     # fanout pins the scorer's parallelism (AQE's byte-based coalescing
     # would fold the small-in-bytes pair table into too few tasks for
     # CPU-heavy work); keyed on anchor so the cogroup below reuses this
@@ -270,9 +297,11 @@ def chamfer_rerank(recall: DataFrame, chunk_sets: DataFrame, k_final: int) -> Da
     pairs = fanout(recall.join(b_side, "neighbor"), "anchor")
 
     def score_group(pairs_pdf, a_pdf):
-        # inner-join semantics on both sides, matching the previous joins:
-        # a pair whose anchor has no chunk set drops; an anchor with no
-        # pairs emits nothing.
+        # a pair whose anchor has no chunk set drops (inner-join
+        # semantics). Every chunk_sets track must appear as a recall
+        # anchor: a key whose pairs side is empty crashes the Python
+        # worker while Arrow-converting the cogroup batch, before this
+        # function runs (tests/test_similarity_pipeline.py, xfail).
         if len(pairs_pdf) == 0 or len(a_pdf) == 0:
             return pd.DataFrame({"anchor": pd.Series(dtype="int64"),
                                  "neighbor": pd.Series(dtype="int64"),
@@ -281,114 +310,17 @@ def chamfer_rerank(recall: DataFrame, chunk_sets: DataFrame, k_final: int) -> Da
         # each cogroup key carries exactly one anchor row — duplicates
         # would have been scored per-row by the pre-cogroup join form,
         # so fail loudly instead of silently scoring only the first.
-        assert len(a_pdf) == 1, f"duplicate chunk_sets rows for anchor: {len(a_pdf)}"
-        A = np.stack([np.asarray(v, dtype=np.float64) for v in a_pdf["ca"].iloc[0]])
+        if len(a_pdf) != 1:
+            raise ValueError(
+                f"chunk_sets has {len(a_pdf)} rows for anchor "
+                f"{a_pdf['anchor'].iloc[0]}; expected one per track"
+            )
+        A = chunk_matrix(a_pdf["ca"].iloc[0])
+        wa = a_pdf["wa"].iloc[0] if weighted else None
+        wbs = pairs_pdf["wb"] if weighted else [None] * len(pairs_pdf)
         out = [
-            (a, n, round(chamfer_numpy(
-                A,
-                np.stack([np.asarray(v, dtype=np.float64) for v in cb]),
-            ), 6))
-            for a, n, cb in zip(
-                pairs_pdf["anchor"], pairs_pdf["neighbor"], pairs_pdf["cb"]
-            )
-        ]
-        return pd.DataFrame(out, columns=["anchor", "neighbor", "score"])
-
-    scored = (
-        pairs.groupBy("anchor")
-        .cogroup(a_side.groupBy("anchor"))
-        .applyInPandas(score_group, schema="anchor long, neighbor long, score double")
-    )
-    w = W.partitionBy("anchor").orderBy(F.col("score").desc(), F.col("neighbor").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_final)
-        .select("anchor", "neighbor", "rank", "score")
-    )
-
-
-def gather_weighted_chunks(
-    chunks: DataFrame,
-    weights: DataFrame,
-    track_col: str,
-    vec_col: str,
-    id_col: str,
-    cap: int = 96,
-    order_col: str | None = None,
-) -> DataFrame:
-    """(track, chunk matrix, weight vector) with aligned ordering: the
-    chunk-IDF weight table (id, weight) joins back onto the chunks by
-    chunk id BEFORE the capped gather, and both arrays collect through
-    one sorted struct so weight i always belongs to chunk i."""
-    order = F.col(order_col) if order_col else F.xxhash64(F.col(vec_col))
-    w = W.partitionBy(track_col).orderBy(order)
-    joined = chunks.join(weights.select(F.col("id").alias(id_col), "weight"), id_col)
-    capped = (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= cap)
-    )
-    # vector stays in its source width through the gather/shuffle (see
-    # gather_chunks — widening happens exactly in the float64 scorer)
-    gathered = capped.groupBy(F.col(track_col).alias("track")).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("__rn").alias("o"),
-                    F.col(vec_col).alias("v"),
-                    F.col("weight").alias("w"),
-                )
-            )
-        ).alias("ovw")
-    )
-    return gathered.select(
-        "track",
-        F.expr("transform(ovw, s -> s.v)").alias("chunk_set"),
-        F.expr("transform(ovw, s -> s.w)").alias("chunk_weights"),
-    )
-
-
-def weighted_chamfer_rerank(
-    recall: DataFrame, weighted_sets: DataFrame, k_final: int
-) -> DataFrame:
-    """Chamfer rerank with chunk-IDF weights on both sides — the
-    reference's full rerank form (rerank.py:60-90 weighted q/d sides,
-    weights from estimate_chunk_weights)."""
-    from tlmc_etl_spark.operators.group_similarity import weighted_chamfer_numpy
-
-    a_side = weighted_sets.select(
-        F.col("track").alias("anchor"),
-        F.col("chunk_set").alias("ca"),
-        F.col("chunk_weights").alias("wa"),
-    )
-    b_side = weighted_sets.select(
-        F.col("track").alias("neighbor"),
-        F.col("chunk_set").alias("cb"),
-        F.col("chunk_weights").alias("wb"),
-    )
-    # same cogroup shape as chamfer_rerank: the anchor-side (matrix,
-    # weights) crosses the shuffle/Arrow boundary once per anchor, the
-    # neighbor payload rides its pair row.
-    pairs = fanout(recall.join(b_side, "neighbor"), "anchor")
-
-    def score_group(pairs_pdf, a_pdf):
-        if len(pairs_pdf) == 0 or len(a_pdf) == 0:
-            return pd.DataFrame({"anchor": pd.Series(dtype="int64"),
-                                 "neighbor": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        # unique-track contract (see chamfer_rerank.score_group)
-        assert len(a_pdf) == 1, f"duplicate weighted_sets rows for anchor: {len(a_pdf)}"
-        A = np.stack([np.asarray(v, dtype=np.float64) for v in a_pdf["ca"].iloc[0]])
-        wa = np.asarray(a_pdf["wa"].iloc[0])
-        out = [
-            (a, n, round(weighted_chamfer_numpy(
-                A,
-                np.stack([np.asarray(v, dtype=np.float64) for v in cb]),
-                wa, np.asarray(wb),
-            ), 6))
-            for a, n, cb, wb in zip(
-                pairs_pdf["anchor"], pairs_pdf["neighbor"],
-                pairs_pdf["cb"], pairs_pdf["wb"],
-            )
+            (a, n, round(chamfer_numpy(A, chunk_matrix(cb), wa, wb), 6))
+            for a, n, cb, wb in zip(pairs_pdf["anchor"], pairs_pdf["neighbor"], pairs_pdf["cb"], wbs)
         ]
         return pd.DataFrame(out, columns=["anchor", "neighbor", "score"])
 

@@ -254,7 +254,7 @@ def chunk_idf_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-IDF weights: generic chunks (high mean cosine vs a corpus
     background sample) down-weighted per track via a sigmoid z-score —
     rerank.py:169-197's estimate_chunk_weights as a distributed plan.
-    Feeds the weighted chamfer rerank (weighted_chamfer_numpy).
+    Feeds the weighted chamfer rerank (chamfer_numpy with chunk weights).
 
     Oracle equivalence: mean-of-cosines against the background equals the
     dot product with the background's MEAN unit vector, so the SQL form
@@ -1391,10 +1391,10 @@ def two_stage_weighted_similarity(spark: SparkSession, sf_dir: str) -> DataFrame
     (tests/test_similarity_pipeline.py)."""
     from tlmc_etl_spark.operators.group_similarity import chunk_idf_weights
     from tlmc_etl_spark.pipelines.similarity import (
+        chamfer_rerank,
         cosine_recall,
-        gather_weighted_chunks,
+        gather_chunks,
         pooled_unit_mean,
-        weighted_chamfer_rerank,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1407,10 +1407,14 @@ def two_stage_weighted_similarity(spark: SparkSession, sf_dir: str) -> DataFrame
     # count() job; any value ≤ tile_rows yields the same single tile.
     recall = cosine_recall(pooled, 15, n_known=50)
     pooled.unpersist()
-    wsets = gather_weighted_chunks(
-        chunks, weights, "track", "vec", "vec_id", cap=96, order_col="vec_id"
+    # weights join back by chunk id BEFORE the capped gather
+    weighted_chunks = chunks.join(
+        weights.select(F.col("id").alias("vec_id"), "weight"), "vec_id"
     )
-    return weighted_chamfer_rerank(recall, wsets, k_final=5).orderBy("anchor", "rank")
+    wsets = gather_chunks(
+        weighted_chunks, "track", "vec", cap=96, order_col="vec_id", weight_col="weight"
+    )
+    return chamfer_rerank(recall, wsets, k_final=5).orderBy("anchor", "rank")
 
 
 _TOKEN_SET_ORACLE = """

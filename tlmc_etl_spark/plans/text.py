@@ -236,7 +236,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session degrades gracefully. No fanout before the persist — the
     # self-join is JVM bytes-proportional work, AQE's byte-based layout is
     # already scale-correct, and the extra exchange measured slower at
-    # sf0.1 (round-4 A/B, tools/ab_fanout.py).
+    # sf0.1 (round-4 same-session A/B, fanout on vs off, interleaved).
     bigrams = ws.select(
         "doc_id",
         F.explode(

@@ -30,6 +30,9 @@ def get_spark(app_name: str = "tlmc-etl-spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.sql.session.timeZone", "UTC")
+        # events.parquet may carry TIMESTAMP(NANOS); read it as long once
+        # per session (sources/tables._load_events converts it).
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow-optimize row-at-a-time Python UDFs (Spark 4): the few
         # licensed F.udf sites (stack parsers — cue sheets, wiki

@@ -35,14 +35,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
-    parquet reader rejects; read nanos as long and convert to a microsecond
-    timestamp (truncation — sub-microsecond precision is below anything the
-    engine exposes). The legacy flag is per-session and runtime-settable.
+    """events.parquet may carry TIMESTAMP(NANOS), which Spark's parquet
+    reader rejects. `session.get_spark` sets
+    `spark.sql.legacy.parquet.nanosAsLong` once, so such a column reads as
+    long; convert it to a microsecond timestamp (truncation —
+    sub-microsecond precision is below anything the engine exposes). A
+    session built elsewhere needs that flag to read a nanos file.
     """
     from pyspark.sql import functions as F
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
