@@ -14,6 +14,11 @@ the host never quiets down it proceeds anyway but stamps
 never masquerade as an idle one. Set SPARK_GRAFT_BENCH_FORCE=1 to skip
 the wait entirely (also stamped).
 
+A stage that fails (the DuckDB suite, the incremental stream, the
+SCALING.json read) is named with its exception on stderr and under
+"errors" in BENCH_FULL.json; a failed DuckDB suite or incremental stream
+also makes the exit status non-zero.
+
 If a committed SCALING.json exists next to this file (produced by
 tools/bench_scaling.py on an idle host), only its SUITE-LEVEL
 spark_over_duckdb ratios per sf are embedded (under
@@ -29,8 +34,10 @@ import json
 import os
 import sys
 import time
+import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from tlmc_etl_spark.plans import QUERIES
 from tlmc_etl_spark.session import get_spark
@@ -229,7 +236,8 @@ def wall_1dp(t: float):
     return int(v) if float(v).is_integer() else v
 
 
-LOAD_THRESHOLD = 4.0  # 1-min loadavg above this => the walls are suspect
+# 1-min loadavg above half the host's cores => the walls are suspect
+LOAD_THRESHOLD = 0.5 * len(os.sched_getaffinity(0))
 WAIT_POLL_SEC = 15
 
 WARM_DIR = "/root/testdata/sf0.001"
@@ -422,9 +430,8 @@ def headline_line(out: dict, limit: int = 1999) -> str:
 def load_oracles() -> dict[str, str]:
     import importlib.util
 
-    here = os.path.dirname(os.path.abspath(__file__))
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(here, "__spark_entry__.py")
+        "__spark_entry__", os.path.join(HERE, "__spark_entry__.py")
     )
     entry_mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry_mod)
@@ -455,7 +462,21 @@ def run_duckdb_suite(
     return matched, per_query
 
 
+FULL_PATH = os.path.join(HERE, "BENCH_FULL.json")
+SCALING_PATH = os.path.join(HERE, "SCALING.json")
+# a failure in these stages leaves the graded artifact without its
+# ratio or its incremental reading, so the run exits non-zero
+FATAL_STAGES = ("duckdb_suite", "incremental")
+
+
 def main() -> None:
+    errors: list[dict] = []
+
+    def record(stage: str, e: Exception) -> None:
+        errors.append({"stage": stage, "error": f"{type(e).__name__}: {e}"})
+        print(f"bench: {stage} failed:", file=sys.stderr)
+        traceback.print_exc()
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
     if os.environ.get("SPARK_GRAFT_BENCH_FORCE"):
@@ -494,8 +515,8 @@ def main() -> None:
             for n in STRESS
             if n in times
         }
-    except Exception:
-        pass
+    except Exception as e:
+        record("duckdb_suite", e)
 
     out = {
         "metric": "headline_suite_wall",
@@ -507,10 +528,9 @@ def main() -> None:
         # BENCH_FULL.json
         "queries": {ALIASES.get(n, n): wall_1dp(t) for n, t in times.items()},
         "sf": sf,
-        # core count the session actually ran with (session.py builds
-        # local[$SPARK_GRAFT_CPUS]) — stamps scaling runs as
-        # self-describing
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        # core count the session actually ran with — stamps scaling
+        # runs as self-describing
+        "cpus": spark.sparkContext.defaultParallelism,
         "loadavg_start": [round(x, 1) for x in load_start],
         "loadavg_end": [round(x, 1) for x in loadavg()],
     }
@@ -540,38 +560,38 @@ def main() -> None:
         out["incr_sec_per_1k_at_10k"] = round(
             run_incremental(spark, 10_000)["sec_per_1k_albums"], 2
         )
-    except Exception:
-        pass
+    except Exception as e:
+        record("incremental", e)
 
-    scaling_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "SCALING.json"
-    )
-    if os.path.exists(scaling_path):
+    if os.path.exists(SCALING_PATH):
         try:
-            scaling = json.load(open(scaling_path))
+            scaling = json.load(open(SCALING_PATH))
             out["scaling_suite_ratio"] = {
                 sf_key: round(d["spark_over_duckdb"], 2)
                 for sf_key, d in scaling.get("sfs", {}).items()
                 if "spark_over_duckdb" in d
             }
-        except Exception:
-            pass
+        except Exception as e:
+            record("scaling_read", e)
     # Full-fidelity artifact FIRST: every per-query wall at 3dp plus all
     # context fields, committed alongside SCALING.json — the stdout line
     # below is byte-budgeted for the driver's 2,000-byte tail and may
     # shed context (and, past 76 queries, its cheapest per-query walls).
+    # Failed stages are listed under "errors"; a failed write of this
+    # file itself can only be reported on stderr.
+    full = dict(out)
+    full["queries"] = {n: round(t, 3) for n, t in times.items()}
+    full["aliases"] = ALIASES  # stdout-line key -> committed here
+    if errors:
+        full["errors"] = errors
     try:
-        full = dict(out)
-        full["queries"] = {n: round(t, 3) for n, t in times.items()}
-        full["aliases"] = ALIASES  # stdout-line key -> committed here
-        full_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-        )
-        with open(full_path, "w") as fh:
+        with open(FULL_PATH, "w") as fh:
             json.dump(full, fh, indent=1)
-    except Exception:
-        pass
+    except Exception as e:
+        record("bench_full_write", e)
     print(headline_line(out))
+    if any(e["stage"] in FATAL_STAGES for e in errors):
+        sys.exit(1)
 
 
 if __name__ == "__main__":

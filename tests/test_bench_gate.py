@@ -5,19 +5,29 @@ recorded 1.604x under loadavg 8.47; the idle truth was 1.12x)."""
 
 from __future__ import annotations
 
+import json
+import os
+from types import SimpleNamespace
+
 import pytest
 
 import bench
 
 
+CORES = len(os.sched_getaffinity(0))
+
+
 def test_idle_host_passes_immediately(monkeypatch):
-    monkeypatch.setattr(bench, "loadavg", lambda: [0.5, 0.4, 0.3])
+    idle = bench.LOAD_THRESHOLD / 4
+    monkeypatch.setattr(bench, "loadavg", lambda: [idle] * 3)
     la, overridden, waited = bench.wait_for_idle(max_wait=60)
-    assert not overridden and waited == 0 and la[0] == 0.5
+    assert not overridden and waited == 0 and la[0] == idle
 
 
 def test_loaded_host_waits_then_overrides(monkeypatch):
-    monkeypatch.setattr(bench, "loadavg", lambda: [9.9, 9.9, 9.9])
+    # one runnable process per core: the gate scales with the host, so
+    # a saturated 4-core host is as suspect as a saturated 32-core one
+    monkeypatch.setattr(bench, "loadavg", lambda: [float(CORES)] * 3)
     sleeps = []
     monkeypatch.setattr(bench.time, "sleep", lambda s: sleeps.append(s))
     la, overridden, waited = bench.wait_for_idle(max_wait=45)
@@ -26,11 +36,12 @@ def test_loaded_host_waits_then_overrides(monkeypatch):
 
 
 def test_load_drop_releases_the_gate(monkeypatch):
-    readings = iter([[9.0] * 3, [7.0] * 3, [1.0] * 3, [1.0] * 3])
+    busy, idle = 2.0 * CORES, bench.LOAD_THRESHOLD / 4
+    readings = iter([[busy] * 3, [busy] * 3, [idle] * 3, [idle] * 3])
     monkeypatch.setattr(bench, "loadavg", lambda: next(readings))
     monkeypatch.setattr(bench.time, "sleep", lambda s: None)
     la, overridden, waited = bench.wait_for_idle(max_wait=600)
-    assert not overridden and la[0] == 1.0 and waited > 0
+    assert not overridden and la[0] == idle and waited > 0
 
 
 def test_headline_line_fits_driver_tail_window():
@@ -57,8 +68,6 @@ def test_headline_line_fits_driver_tail_window():
     }
     line = bench.headline_line(out)
     assert len(line) <= 2000
-    import json
-
     parsed = json.loads(line)
     assert parsed["spark_over_duckdb"] == 123.456  # ratio survives truncation
     # scaling_suite_ratio is droppable (the committed SCALING.json holds
@@ -98,8 +107,6 @@ def test_realistic_overflow_drops_context_fields_not_graded_queries():
     longer fit 2,000 bytes at any precision with all stamps present)
     it sheds STRESS-EXCLUDED entries — outside the graded ratio by
     definition — before any graded one."""
-    import json
-
     out = _stamped_worst_case(wall=3.21)
     line = bench.headline_line(out)
     parsed = json.loads(line)
@@ -119,8 +126,6 @@ def test_pathological_overflow_sheds_cheapest_queries_and_keeps_stamps():
     stamp, and the most expensive entries always survive (the complete
     map lives in the committed BENCH_FULL.json, written before this
     serializer runs)."""
-    import json
-
     out = _stamped_worst_case(wall=12.34)
     out["queries"]["minhash_lsh_dedup"] = 99.9  # the expensive evidence
     line = bench.headline_line(out)
@@ -163,8 +168,6 @@ def test_aliased_realistic_line_keeps_1dp_and_all_context():
     no truncation at all — that is the whole point of the aliases
     (round 15 proved 79 full names cannot carry decimals in 2,000
     bytes: 1,455 bytes of names + 1dp walls is >2,100)."""
-    import json
-
     walls = {n: 0.126 + (i % 40) / 10 for i, n in enumerate(bench.HEADLINE)}
     out = {
         "metric": "headline_suite_wall",
@@ -202,8 +205,6 @@ def test_aliased_realistic_line_keeps_1dp_and_all_context():
 
 
 def test_warm_suite_names_the_failing_query_and_runs_no_substitute(monkeypatch):
-    from types import SimpleNamespace
-
     ran = []
 
     class _Counted:
@@ -227,3 +228,70 @@ def test_warm_suite_names_the_failing_query_and_runs_no_substitute(monkeypatch):
         bench.warm_suite(None, ["ok_query", "broken_query", "pricing_summary"])
     assert isinstance(exc.value.__cause__, ValueError)
     assert ran == ["ok_query"], "a failed warm-up must not run another query in its place"
+
+
+def _stub_bench_run(monkeypatch, tmp_path, *, duckdb_ok, incremental_ok):
+    """main() with Spark, the suites and the artifact paths stubbed: only
+    its error handling runs."""
+    import tools.bench_incremental
+
+    def fail(msg):
+        def raise_(*a, **kw):
+            raise RuntimeError(msg)
+        return raise_
+
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(setLogLevel=lambda level: None, defaultParallelism=3)
+    )
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_FORCE", "1")
+    monkeypatch.setattr(bench, "get_spark", lambda name: spark)
+    monkeypatch.setattr(bench, "warm_suite", lambda spark, names: None)
+    monkeypatch.setattr(
+        bench, "run_spark_suite", lambda spark, names, sf_dir: {n: 1.0 for n in names}
+    )
+    monkeypatch.setattr(bench, "load_oracles", lambda: {})
+    monkeypatch.setattr(
+        bench,
+        "run_duckdb_suite",
+        (lambda names, sf_dir, oracles: (["pricing_summary"], {"pricing_summary": 0.5}))
+        if duckdb_ok else fail("duckdb exploded"),
+    )
+    monkeypatch.setattr(
+        tools.bench_incremental,
+        "run",
+        (lambda spark, n: {"sec_per_1k_albums": 1.0})
+        if incremental_ok else fail("stream exploded"),
+    )
+    monkeypatch.setattr(bench, "FULL_PATH", str(tmp_path / "BENCH_FULL.json"))
+    monkeypatch.setattr(bench, "SCALING_PATH", str(tmp_path / "SCALING.json"))
+
+
+def test_failed_stages_are_recorded_and_fail_the_run(monkeypatch, tmp_path, capsys):
+    _stub_bench_run(monkeypatch, tmp_path, duckdb_ok=False, incremental_ok=False)
+    (tmp_path / "SCALING.json").write_text("{not json")
+    with pytest.raises(SystemExit) as exc:
+        bench.main()
+    assert exc.value.code != 0
+    full = json.loads((tmp_path / "BENCH_FULL.json").read_text())
+    assert [e["stage"] for e in full["errors"]] == ["duckdb_suite", "incremental", "scaling_read"]
+    assert "RuntimeError: duckdb exploded" in full["errors"][0]["error"]
+    assert "RuntimeError: stream exploded" in full["errors"][1]["error"]
+    assert "JSONDecodeError" in full["errors"][2]["error"]
+    assert full["cpus"] == 3, "cpus comes from the session, not an env default"
+    assert "spark_over_duckdb" not in full and "incr_sec_per_1k" not in full
+    assert "duckdb_suite failed" in capsys.readouterr().err
+
+
+def test_clean_run_exits_zero_and_a_failed_write_is_named(monkeypatch, tmp_path, capsys):
+    _stub_bench_run(monkeypatch, tmp_path, duckdb_ok=True, incremental_ok=True)
+    bench.main()  # no SystemExit
+    full = json.loads((tmp_path / "BENCH_FULL.json").read_text())
+    assert "errors" not in full
+    assert full["spark_over_duckdb"] == 2.0 and full["incr_sec_per_1k"] == 1.0
+    # the artifact's own write failing is a stderr report, not fatal
+    monkeypatch.setattr(bench, "FULL_PATH", str(tmp_path / "missing" / "BENCH_FULL.json"))
+    capsys.readouterr()
+    bench.main()
+    captured = capsys.readouterr()
+    assert "bench_full_write failed" in captured.err and "FileNotFoundError" in captured.err
+    assert json.loads(captured.out.strip().splitlines()[-1])["value"] > 0

@@ -52,18 +52,18 @@ def test_filter_over_view_pushes_into_scan(spark, sf_dir):
 
 class TestObservation:
     def test_metrics_ride_the_action_and_match_direct_counts(self, spark, sf_dir):
+        from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        from tlmc_etl_spark.observability import observe_counts
         from tlmc_etl_spark.sources.tables import load_table
 
         orders = load_table(spark, sf_dir, "orders")
-        obs, df = observe_counts(
-            orders,
-            "orders_quality",
-            n_rows=F.count(F.lit(1)),
-            n_urgent=F.count(F.when(F.col("o_orderpriority") == "1-URGENT", 1)),
-            max_price=F.max("o_totalprice"),
+        obs = Observation("orders_quality")
+        df = orders.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count(F.when(F.col("o_orderpriority") == "1-URGENT", 1)).alias("n_urgent"),
+            F.max("o_totalprice").alias("max_price"),
         )
         out = df.filter(F.col("o_totalprice") > 0).count()  # one action
         got = obs.get

@@ -614,11 +614,12 @@ def test_lsh_topk_routes_to_ivf_past_corpus_ceiling(spark, sf_dir):
     quantizer — same output contract, occupancy-sized cells. Forced
     here by lowering the ceiling under the 500-row corpus."""
     from tlmc_etl_spark.operators.vectors import ivf_topk, lsh_topk
-    from tlmc_etl_spark.sources.tables import load_table
+    from tlmc_etl_spark.sources.tables import load_table, table_row_count
 
     emb = load_table(spark, sf_dir, "embeddings")
+    n = table_row_count(f"{sf_dir}/embeddings.parquet")
     routed = lsh_topk(
-        emb, "vec_id", "embedding", k=10, corpus_ceiling=100
+        emb, "vec_id", "embedding", n, k=10, corpus_ceiling=100
     ).orderBy("anchor", "rank")
     want = ivf_topk(
         emb, "vec_id", "embedding", k=10, n_centroids=16, n_probe=4
@@ -628,8 +629,8 @@ def test_lsh_topk_routes_to_ivf_past_corpus_ceiling(spark, sf_dir):
     ]
     # below the ceiling the LSH form is untouched (its SQL-replay oracle
     # stays the value check at the driver sf)
-    lsh = lsh_topk(emb, "vec_id", "embedding", k=10)
-    forced = lsh_topk(emb, "vec_id", "embedding", k=10, corpus_ceiling=None)
+    lsh = lsh_topk(emb, "vec_id", "embedding", n, k=10)
+    forced = lsh_topk(emb, "vec_id", "embedding", n, k=10, corpus_ceiling=None)
     assert sorted(map(tuple, lsh.collect())) == sorted(map(tuple, forced.collect()))
 
 
@@ -638,9 +639,7 @@ def test_lsh_topk_ivf_takeover_recall_above_lsh_floor(spark):
     sub-ceiling regime (the SQL replay encodes the LSH candidate rule),
     so the TAKEOVER regime needs its own gate — at n > 4096 the routed
     IVF candidate set must hold at least the LSH form's own gated
-    recall floor (0.15 mean@10, test_lsh_ann_recall_vs_exact). Also
-    exercises n_known (footer-derived corpus size): the regime decision
-    must not schedule a count job."""
+    recall floor (0.15 mean@10, test_lsh_ann_recall_vs_exact)."""
     from tlmc_etl_spark.operators.vectors import LSH_TOPK_CORPUS_CEILING, lsh_topk
 
     rng = np.random.default_rng(7)
@@ -652,7 +651,7 @@ def test_lsh_topk_ivf_takeover_recall_above_lsh_floor(spark):
     df = spark.createDataFrame(
         [(i, [float(x) for x in M[i]]) for i in range(n)], "id long, vec array<double>"
     )
-    routed = lsh_topk(df, "id", "vec", k=10, n_known=n)
+    routed = lsh_topk(df, "id", "vec", n, k=10)
     by_anchor: dict[int, set[int]] = {}
     for r in routed.collect():
         by_anchor.setdefault(r["anchor"], set()).add(r["neighbor"])
@@ -677,4 +676,36 @@ def test_table_row_count_matches_footer(sf_dir):
 
     con = duckdb.connect()
     want = con.execute(f"SELECT count(*) FROM '{sf_dir}/embeddings.parquet'").fetchone()[0]
-    assert table_row_count(sf_dir, "embeddings") == want
+    assert table_row_count(f"{sf_dir}/embeddings.parquet") == want
+
+
+def test_table_row_count_on_a_many_part_file_directory(spark, tmp_path):
+    """A Spark-written directory table — 200 part files under a
+    key=value partition directory, plus _SUCCESS and checksum files —
+    counts from its footers exactly as Spark and DuckDB count it, and
+    schedules no Spark job."""
+    import glob
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from tlmc_etl_spark.sources.tables import table_row_count
+
+    path = str(tmp_path / "many.parquet")
+    spark.range(0, 2003, numPartitions=200).withColumn(
+        "key", (F.col("id") % 2).cast("int")
+    ).write.partitionBy("key").parquet(path)
+    assert len(glob.glob(f"{path}/key=*/*.parquet")) >= 200
+    assert glob.glob(f"{path}/_SUCCESS") and glob.glob(f"{path}/key=0/.*.crc")
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "footer-count")
+    try:
+        n = table_row_count(path)
+        assert sc.statusTracker().getJobIdsForGroup("footer-count") == []
+        assert spark.read.parquet(path).count() == n
+        assert sc.statusTracker().getJobIdsForGroup("footer-count"), "group must see jobs"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    con = duckdb.connect()
+    assert con.execute(f"SELECT count(*) FROM '{path}/**/*.parquet'").fetchone()[0] == n == 2003

@@ -190,7 +190,7 @@ def test_lifecycle_halves_stay_within_split_shuffle_budgets(spark, sf_dir, tmp_p
     )
     from tlmc_etl_spark.pipelines.metadata import build_catalog
     from tlmc_etl_spark.sinks.shards import write_similar_track_shards
-    from tlmc_etl_spark.sources.tables import load_table
+    from tlmc_etl_spark.sources.tables import load_table, table_row_count
 
     fixtures = os.path.join(os.path.dirname(__file__), "..", "fixtures", "metadata")
     manifest = spark.read.parquet(os.path.join(fixtures, "manifest.parquet"))
@@ -202,7 +202,8 @@ def test_lifecycle_halves_stay_within_split_shuffle_budgets(spark, sf_dir, tmp_p
     chunks = emb.select(
         (F.col("vec_id") % 50).alias("track"), "vec_id", F.col("embedding").alias("vec")
     )
-    rel, ranked, n_rel = lifecycle_pre_sink(spark, release, chunks)
+    manifest_rows = table_row_count(os.path.join(fixtures, "manifest.parquet"))
+    rel, ranked, n_rel = lifecycle_pre_sink(spark, release, chunks, manifest_rows)
     n_pre = _live_shuffles(ranked)
     assert n_pre <= LIFECYCLE_PRE_SINK_BUDGET, (
         f"lifecycle pre-sink: {n_pre} live shuffles, budget "

@@ -7,7 +7,6 @@ from __future__ import annotations
 import duckdb
 import numpy as np
 import pytest
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from tlmc_etl_spark.operators.vectors import chamfer_numpy
@@ -132,11 +131,11 @@ def test_tiled_recall_equals_single_tile(spark, chunked):
     try:
         one = {
             (r["anchor"], r["neighbor"]): r["recall_score"]
-            for r in cosine_recall(pooled, K_RECALL).collect()
+            for r in cosine_recall(pooled, K_RECALL, N_TRACKS).collect()
         }
         many = {
             (r["anchor"], r["neighbor"]): r["recall_score"]
-            for r in cosine_recall(pooled, K_RECALL, tile_rows=7).collect()
+            for r in cosine_recall(pooled, K_RECALL, N_TRACKS, tile_rows=7).collect()
         }
         assert one == many, "tiling must be invisible in results"
         assert len({a for a, _ in one}) == N_TRACKS
@@ -196,11 +195,12 @@ class TestRecallSelfSelection:
         ).persist()
         try:
             exact = {}
-            for r in cosine_recall(pooled, K_RECALL).collect():
+            n = n_clusters * per_cluster
+            for r in cosine_recall(pooled, K_RECALL, n).collect():
                 exact.setdefault(r["anchor"], set()).add(r["neighbor"])
             approx = {}
             for r in recall_candidates(
-                pooled, K_RECALL, exact_tile_ceiling=0, target_cell=25
+                pooled, K_RECALL, n, exact_tile_ceiling=0, target_cell=25
             ).collect():
                 approx.setdefault(r["anchor"], set()).add(r["neighbor"])
             assert set(approx) == set(exact), "every anchor must be recalled"
@@ -282,11 +282,11 @@ def test_weighted_two_stage_matches_numpy_composition(spark, sf_dir, numpy_ref):
         assert sorted(ranks) == list(range(1, K_FINAL + 1))
 
 
-def test_n_known_threads_through_without_a_count_job(spark, monkeypatch):
-    """Every production caller passes n_known, so the recall stage must
-    never fall back to its own pooled.count() — that is one extra Spark
-    job PER QUERY CALL at any corpus size. Pinned by intercepting
-    DataFrame.count for the duration of plan build + execution."""
+def test_recall_stage_runs_no_count_job(spark, monkeypatch):
+    """The corpus size is an input of the recall stage: it must never
+    run its own pooled.count() — that is one extra Spark job PER QUERY
+    CALL at any corpus size. Pinned by intercepting DataFrame.count for
+    the duration of plan build + execution."""
     import numpy as np
     from pyspark.sql import DataFrame
 
@@ -308,10 +308,10 @@ def test_n_known_threads_through_without_a_count_job(spark, monkeypatch):
         return orig_count(self)
 
     monkeypatch.setattr(DataFrame, "count", spying_count)
-    out = recall_candidates(pooled, 5, n_known=40).collect()
+    out = recall_candidates(pooled, 5, 40).collect()
     assert len(out) > 0
     assert not count_calls, (
-        f"recall stage ran {len(count_calls)} count() job(s) despite n_known"
+        f"recall stage ran {len(count_calls)} count() job(s)"
     )
 
 
@@ -340,14 +340,11 @@ def test_rerank_rejects_duplicate_chunk_set_rows(spark, weighted):
         chamfer_rerank(recall, dup, 2).collect()
 
 
-@pytest.mark.xfail(
-    strict=True,
-    raises=Py4JJavaError,
-    reason="a chunk_sets track with no recall pairs leaves the cogroup's "
-    "pairs side empty for that key, and the Python worker crashes while "
-    "Arrow-converting the batch; until fixed, every track must be a recall anchor",
-)
 def test_rerank_skips_an_anchor_without_recall_pairs(spark):
+    """A chunk_sets track that is never a recall anchor scores nothing as
+    an anchor. Without the semi-join onto recall anchors, its cogroup key
+    had an empty pairs side and the Python worker crashed in the Arrow
+    conversion."""
     from tlmc_etl_spark.pipelines.similarity import chamfer_rerank
 
     sets = spark.createDataFrame(

@@ -188,14 +188,16 @@ def lsh_topk(
     emb: DataFrame,
     id_col: str,
     vec_col: str,
+    n: int,
     k: int = 10,
     n_planes: int = 4,
     seed: int = 42,
     multi_probe: bool = True,
     corpus_ceiling: int = LSH_TOPK_CORPUS_CEILING,
-    n_known: int | None = None,
 ) -> DataFrame:
-    """Approximate cosine top-k: candidates restricted to the same LSH
+    """Approximate cosine top-k over the `n`-row corpus `emb` (the caller
+    supplies the size, e.g. a parquet footer count; the operator never
+    counts): candidates restricted to the same LSH
     bucket (plus one-bit-flip probe buckets), then exact cosine + a
     per-anchor window rank.
 
@@ -215,11 +217,6 @@ def lsh_topk(
     tests/test_ext_operators.py. Pass corpus_ceiling=None to force the
     LSH form.
 
-    `n_known`: corpus size the caller already knows (e.g. from parquet
-    footer metadata — plans/ext.py's lsh_ann_topk) — passing it makes
-    the regime decision free; without it the operator pays one eager
-    count job per call (round-16 verdict item 5).
-
     ORACLE REGIME NOTE: the declared output is an approximate candidate
     set. The SQL replay oracle (plans/ext.py `_lsh_ann_oracle`) encodes
     the fixed-plane LSH candidate rule, i.e. the sub-ceiling regime
@@ -228,14 +225,12 @@ def lsh_topk(
     all sit below the ceiling, so the SQL check pins the regime it
     replays.
     """
-    if corpus_ceiling is not None:
-        n = n_known if n_known is not None else emb.count()
-        if n > corpus_ceiling:
-            n_centroids = min(max(16, n // 256), SEMDEDUP_CENTROID_CEILING)
-            return ivf_topk(
-                emb, id_col, vec_col, k=k,
-                n_centroids=n_centroids, n_probe=4, seed=seed,
-            )
+    if corpus_ceiling is not None and n > corpus_ceiling:
+        n_centroids = min(max(16, n // 256), SEMDEDUP_CENTROID_CEILING)
+        return ivf_topk(
+            emb, id_col, vec_col, k=k,
+            n_centroids=n_centroids, n_probe=4, seed=seed,
+        )
     planes = make_hyperplanes(_dim_of(emb, vec_col), n_planes, seed)
     bucketed = _with_unit_norm(
         lsh_bucket_ids(emb.select(id_col, vec_col), vec_col, planes), vec_col

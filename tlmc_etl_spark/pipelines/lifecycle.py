@@ -39,11 +39,11 @@ def lifecycle_pre_sink(
     spark: SparkSession,
     release: DataFrame,
     chunks: DataFrame,
+    catalog_rows: int,
     track_col: str = "track",
     vec_col: str = "vec",
     k_recall: int = 15,
     k_final: int = 5,
-    catalog_rows_hint: int | None = None,
 ):
     """Stages 1-2 (catalog gate → similarity): returns (rel, ranked,
     n_rel) WITHOUT writing the sink — `ranked` is the complete pre-sink
@@ -81,18 +81,14 @@ def lifecycle_pre_sink(
     # in, |releases| rows out): planned normally it pays ~14 sequential
     # one-task jobs — mostly BroadcastExchange builds, one per dimension
     # join, plus AQE stage materializations (the round-15 "AQE
-    # dimension-floor"). With a caller-supplied row estimate — the
-    # manifest's parquet footer count, no job — the whole subtree
-    # compiles (persist() freezes the physical plan at call time, so the
-    # context must wrap it) and runs as ONE statically planned job with
-    # size-derived partitions (measured 15 jobs -> 1 job / 16 chained
-    # one-task stages), and the persisted catalog caches in that compact
-    # layout. Without a hint, behavior is unchanged.
-    if catalog_rows_hint is not None:
-        with dimension_exec(spark, catalog_rows_hint):
-            rel = _mk_rel()
-            n_rel = rel.count()
-    else:
+    # dimension-floor"). `catalog_rows` bounds the catalog's size — the
+    # manifest's parquet footer count, no job — so under dimension_exec
+    # the whole subtree compiles (persist() freezes the physical plan at
+    # call time, so the context must wrap it) and runs as ONE statically
+    # planned job with size-derived partitions (measured 15 jobs -> 1 job
+    # / 16 chained one-task stages), and the persisted catalog caches in
+    # that compact layout.
+    with dimension_exec(spark, catalog_rows):
         rel = _mk_rel()
         n_rel = rel.count()
     clean_idx = rel.filter("clean").select("release_idx")
@@ -137,24 +133,24 @@ def similar_track_lifecycle(
     release: DataFrame,
     chunks: DataFrame,
     out_dir: str,
+    catalog_rows: int,
     track_col: str = "track",
     vec_col: str = "vec",
     k_recall: int = 15,
     k_final: int = 5,
     n_shards: int = 8,
     portable_shards: bool = False,
-    catalog_rows_hint: int | None = None,
 ) -> DataFrame:
     """Run catalog-gate → similarity → shard sink; return per-shard stats.
 
     `release` is the gold catalog (must carry circle_dir/album_dir/
     album_name/needs_review_reasons); `chunks` the (track, order, vec)
-    chunk table. Tracks map to releases by track mod |catalog| — the
-    synthetic keying the test tables use throughout.
+    chunk table; `catalog_rows` an upper bound on the catalog's rows
+    (the manifest's footer count). Tracks map to releases by track mod
+    |catalog| — the synthetic keying the test tables use throughout.
     """
     rel, ranked, n_rel = lifecycle_pre_sink(
-        spark, release, chunks, track_col, vec_col, k_recall, k_final,
-        catalog_rows_hint=catalog_rows_hint,
+        spark, release, chunks, catalog_rows, track_col, vec_col, k_recall, k_final
     )
     write_similar_track_shards(
         ranked, out_dir, n_shards=n_shards, portable=portable_shards

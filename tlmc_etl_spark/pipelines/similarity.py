@@ -57,12 +57,10 @@ def _normalized(col: str):
     return F.transform(F.col(col), lambda x: x / norm)
 
 
-def cosine_recall(
-    pooled: DataFrame, k: int, tile_rows: int = 200_000, n_known: int | None = None
-) -> DataFrame:
-    """Exact cosine top-k over the pooled table (tiled matmul; pooled
-    vectors are unit-norm so cosine = dot). Output (anchor, neighbor,
-    recall_score).
+def cosine_recall(pooled: DataFrame, k: int, n: int, tile_rows: int = 200_000) -> DataFrame:
+    """Exact cosine top-k over the pooled table of `n` rows (tiled
+    matmul; pooled vectors are unit-norm so cosine = dot). Output
+    (anchor, neighbor, recall_score).
 
     Scale shape: the CANDIDATE side is processed in hash tiles of at most
     `tile_rows` rows — each tile is collected, broadcast, and scored
@@ -75,7 +73,6 @@ def cosine_recall(
     """
     import math
 
-    n = pooled.count() if n_known is None else n_known
     n_tiles = max(1, math.ceil(n / tile_rows))
     spark = pooled.sparkSession
 
@@ -171,16 +168,19 @@ def choose_recall_strategy(
 def recall_candidates(
     pooled: DataFrame,
     k: int,
+    n: int,
     tile_rows: int = 200_000,
     exact_tile_ceiling: int = EXACT_TILE_CEILING,
     target_cell: int = 4096,
     n_probe: int = 8,
     seed: int = 42,
-    n_known: int | None = None,
 ) -> DataFrame:
-    """Self-selecting recall stage: exact tiled cosine while the corpus
-    is small enough that every candidate tile fits through a bounded
-    number of driver collects; IVF candidate generation beyond.
+    """Self-selecting recall stage over the pooled table of `n` rows:
+    exact tiled cosine while the corpus is small enough that every
+    candidate tile fits through a bounded number of driver collects; IVF
+    candidate generation beyond. Both arms return a MATERIALIZED table
+    (the exact arm's merged top-k checkpoint, the IVF arm's own), so the
+    caller may release `pooled` as soon as this returns.
 
     The IVF arm auto-sizes the coarse quantizer to the corpus —
     n_centroids = ceil(n / target_cell) keeps EXPECTED cell occupancy
@@ -193,9 +193,8 @@ def recall_candidates(
     """
     import math
 
-    n = pooled.count() if n_known is None else n_known
     if choose_recall_strategy(n, tile_rows, exact_tile_ceiling) == "exact":
-        return cosine_recall(pooled, k, tile_rows, n_known=n)
+        return cosine_recall(pooled, k, n, tile_rows)
     from tlmc_etl_spark.operators.vectors import ivf_topk
 
     n_centroids = max(16, math.ceil(n / target_cell))
@@ -211,7 +210,7 @@ def recall_candidates(
         "anchor",
         "neighbor",
         F.round(F.col("score"), 6).alias("recall_score"),
-    )
+    ).localCheckpoint(eager=True)
 
 
 def gather_chunks(
@@ -289,7 +288,16 @@ def chamfer_rerank(recall: DataFrame, chunk_sets: DataFrame, k_final: int) -> Da
         return chunk_sets.select(*cols)
 
     b_side = side("neighbor", "cb", "wb")
-    a_side = side("anchor", "ca", "wa")
+    # Only recall anchors get an anchor-side row: a cogroup key whose
+    # pairs side is empty while the other side carries the nested chunk
+    # matrix crashes the Python worker in the Arrow conversion, before
+    # score_group runs. Recall is n_anchors × k_recall rows, so a
+    # broadcast semi-join filters without adding an exchange. (An anchor
+    # none of whose neighbors has a chunk set would still crash; recall
+    # and chunk_sets built from the same chunks never produce one.)
+    a_side = side("anchor", "ca", "wa").join(
+        F.broadcast(recall.select("anchor")), "anchor", "left_semi"
+    )
     # fanout pins the scorer's parallelism (AQE's byte-based coalescing
     # would fold the small-in-bytes pair table into too few tasks for
     # CPU-heavy work); keyed on anchor so the cogroup below reuses this
@@ -298,10 +306,7 @@ def chamfer_rerank(recall: DataFrame, chunk_sets: DataFrame, k_final: int) -> Da
 
     def score_group(pairs_pdf, a_pdf):
         # a pair whose anchor has no chunk set drops (inner-join
-        # semantics). Every chunk_sets track must appear as a recall
-        # anchor: a key whose pairs side is empty crashes the Python
-        # worker while Arrow-converting the cogroup batch, before this
-        # function runs (tests/test_similarity_pipeline.py, xfail).
+        # semantics); a_side holds recall anchors only (see above).
         if len(pairs_pdf) == 0 or len(a_pdf) == 0:
             return pd.DataFrame({"anchor": pd.Series(dtype="int64"),
                                  "neighbor": pd.Series(dtype="int64"),
@@ -348,20 +353,18 @@ def two_stage_similar_tracks(
 ) -> DataFrame:
     """recall→rerank composition; output feeds
     sinks/shards.write_similar_track_shards unchanged."""
-    # The pooled table feeds cosine_recall several times: the count, each
-    # candidate tile collect, and the distributed anchor input. Persist it
+    # The pooled table feeds the recall stage several times: each
+    # candidate tile collect and the distributed anchor input. Persist it
     # (n_tracks rows — tiny at any corpus scale) so the explode+aggregate
-    # pooling subtree runs once.
+    # pooling subtree runs once. The count below is that persisted
+    # table's materialization, not a separate probe: it fills the cache,
+    # and the recall stage reuses its result as the corpus size.
     pooled = pooled_unit_mean(chunks, track_col, vec_col).persist()
-    # Self-selecting: exact tiled cosine under the tile ceiling, IVF
-    # candidates beyond it (recall floor property-gated).
     n = pooled.count()
-    recall = recall_candidates(pooled, k_recall, n_known=n)
-    # The recall stage consumes pooled eagerly in the exact arm (tile
-    # collects, per-tile top-k partials localCheckpointed); the IVF arm
-    # is lazy, so materialize before releasing the cache.
-    if choose_recall_strategy(n) != "exact":
-        recall = recall.localCheckpoint(eager=True)
+    # Self-selecting: exact tiled cosine under the tile ceiling, IVF
+    # candidates beyond it (recall floor property-gated). Either arm
+    # returns a materialized table, so the cache can go.
+    recall = recall_candidates(pooled, k_recall, n)
     pooled.unpersist()
     sets = gather_chunks(chunks, track_col, vec_col, chunk_cap, order_col=chunk_order_col)
     return chamfer_rerank(recall, sets, k_final)

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from tlmc_etl_spark.plans.ext import _plant_near_dups
 from tlmc_etl_spark.plans.registry import query
-from tlmc_etl_spark.sources.tables import load_table
+from tlmc_etl_spark.sources.tables import load_table, table_row_count
 
 
 # --------------------------------------------------------------------------
@@ -521,14 +521,9 @@ def lifecycle_shards_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % 50).alias("track"), "vec_id", F.col("embedding").alias("vec")
     )
     out_dir = scratch_dir(spark, "lifecycle_shards_portable", sf_dir)
-    import pyarrow.parquet as pq
-
-    manifest_rows = pq.ParquetFile(
-        os.path.join(_FIXTURE_DIR, "manifest.parquet")
-    ).metadata.num_rows
+    manifest_rows = table_row_count(os.path.join(_FIXTURE_DIR, "manifest.parquet"))
     return similar_track_lifecycle(
-        spark, release, chunks, out_dir, portable_shards=True,
-        catalog_rows_hint=manifest_rows,
+        spark, release, chunks, out_dir, manifest_rows, portable_shards=True
     )
 
 

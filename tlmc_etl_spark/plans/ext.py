@@ -27,7 +27,7 @@ from tlmc_etl_spark.operators.vectors import (
     lsh_topk,
 )
 from tlmc_etl_spark.plans.registry import query
-from tlmc_etl_spark.sources.tables import load_table
+from tlmc_etl_spark.sources.tables import load_table, table_row_count
 
 
 @query("minhash_lsh_prodhash")
@@ -331,15 +331,11 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule, i.e. the sub-ceiling (n <= LSH_TOPK_CORPUS_CEILING) regime the
     driver's oracle sfs run in; past the ceiling lsh_topk serves the
     same contract through the IVF quantizer (recall property-gated, not
-    SQL-replayed — see operators/vectors.lsh_topk). n_known from the
-    parquet footer makes that regime decision free (no count job)."""
-    from tlmc_etl_spark.sources.tables import table_row_count
-
+    SQL-replayed — see operators/vectors.lsh_topk). The corpus size
+    comes from the parquet footer, so that regime decision runs no job."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_topk(
-        emb, "vec_id", "embedding", k=10, n_planes=4,
-        n_known=table_row_count(sf_dir, "embeddings"),
-    ).orderBy("anchor", "rank")
+    n = table_row_count(f"{sf_dir}/embeddings.parquet")
+    return lsh_topk(emb, "vec_id", "embedding", n, k=10, n_planes=4).orderBy("anchor", "rank")
 
 
 @query("embedding_near_dup_lsh_lowthr")
@@ -1403,9 +1399,9 @@ def two_stage_weighted_similarity(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     weights = chunk_idf_weights(chunks, "vec_id", "track", "vec")
     pooled = pooled_unit_mean(chunks, "track", "vec").persist()
-    # n_known by construction (track = vec_id % 50): skips the per-call
-    # count() job; any value ≤ tile_rows yields the same single tile.
-    recall = cosine_recall(pooled, 15, n_known=50)
+    # 50 tracks by construction (track = vec_id % 50); any n ≤ tile_rows
+    # yields the same single tile.
+    recall = cosine_recall(pooled, 15, 50)
     pooled.unpersist()
     # weights join back by chunk id BEFORE the capped gather
     weighted_chunks = chunks.join(
@@ -1843,17 +1839,10 @@ def lifecycle_similar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % 50).alias("track"), "vec_id", F.col("embedding").alias("vec")
     )
     out_dir = scratch_dir(spark, "lifecycle_shards", sf_dir)
-    # catalog size hint from the manifest footer (no job): the release
-    # dimension has at most |manifest| rows, which sizes the catalog
-    # materialization's static plan (tuning.dimension_exec)
-    import pyarrow.parquet as pq
-
-    manifest_rows = pq.ParquetFile(
-        os.path.join(_FIXTURE_DIR, "manifest.parquet")
-    ).metadata.num_rows
-    return similar_track_lifecycle(
-        spark, release, chunks, out_dir, catalog_rows_hint=manifest_rows
-    )
+    # the release dimension has at most |manifest| rows: the manifest's
+    # footer count sizes the catalog materialization (tuning.dimension_exec)
+    manifest_rows = table_row_count(os.path.join(_FIXTURE_DIR, "manifest.parquet"))
+    return similar_track_lifecycle(spark, release, chunks, out_dir, manifest_rows)
 
 
 _MINHASH_XENGINE_ORACLE = """

@@ -24,6 +24,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tlmc_etl_spark.sources.tables import table_row_count
+
 
 def write_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
     """Write `df` as parquet partitioned by `partition_col`.
@@ -90,17 +92,16 @@ def compact_files(
     open/footer cost dominates scans. Compaction is a read → coalesce →
     write of the SAME bytes: `coalesce` (not `repartition`) so merging is
     shuffle-free — tasks concatenate input splits instead of re-hashing
-    100 TB. Row-count parity is the caller-visible invariant (gated in
-    tests/test_partitioned_pruning.py::TestCompaction).
+    100 TB. The output file count comes from the input's footer row
+    count, so sizing runs no job. Row-count parity is the caller-visible
+    invariant (gated in tests/test_partitioned_pruning.py::TestCompaction).
 
     Writes to `dst` (overwrite) rather than in place: the swap is the
     caller's atomic-publish step, matching the reference's
     write-then-rename discipline (journal.py:48-126).
     """
-    df = spark.read.parquet(src)
-    n_rows = df.count()
-    n_files = max(1, -(-n_rows // target_rows_per_file))
-    df.coalesce(n_files).write.mode("overwrite").parquet(dst)
+    n_files = max(1, -(-table_row_count(src) // target_rows_per_file))
+    spark.read.parquet(src).coalesce(n_files).write.mode("overwrite").parquet(dst)
     import glob as _glob
 
     return len(_glob.glob(os.path.join(dst, "*.parquet")))

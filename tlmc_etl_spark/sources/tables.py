@@ -57,23 +57,26 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def table_row_count(sf_dir: str, name: str) -> int:
-    """Row count from parquet FOOTER metadata — no Spark job.
+def table_row_count(path: str) -> int:
+    """Row count of the parquet table at `path` (one file or a directory
+    of part files) from its FOOTERS — no Spark job. This is the package's
+    one way to size an input before a plan is built.
 
-    Regime-routing operators (lsh_topk's IVF takeover) need the corpus
-    size before building the plan; counting through Spark schedules an
-    eager job per call. The footer already stores the exact count (per
-    file, summed over part files for a directory table)."""
+    A directory is read the way Spark reads it: every file below it,
+    partition subdirectories included, except names starting with `_`
+    or `.` (`_SUCCESS`, checksum files)."""
     import os
 
     import pyarrow.parquet as pq
 
-    path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        return sum(
+    if not os.path.isdir(path):
+        return pq.ParquetFile(path).metadata.num_rows
+    n = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        n += sum(
             pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-            for root, _, files in os.walk(path)
             for f in files
-            if f.endswith(".parquet")
+            if not f.startswith(("_", "."))
         )
-    return pq.ParquetFile(path).metadata.num_rows
+    return n

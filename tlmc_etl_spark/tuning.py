@@ -74,13 +74,17 @@ def bounded_one_partition(numeric_col) -> "Column":  # noqa: F821
     return F.pmod(F.coalesce(c, F.lit(0)), F.lit(1))
 
 
+# Row bound under which dimension_exec plans a subtree as one task.
+ONE_TASK_ROWS = 4096
+
+
 @contextmanager
-def dimension_exec(spark, est_rows: int, one_task_rows: int = 4096):
+def dimension_exec(spark, est_rows: int):
     """Scoped execution context for materializing a DIMENSION-sized
     subtree (catalog/release tables, top-k results, month domains).
 
     When the caller's row estimate says the WHOLE subtree fits one task
-    (<= `one_task_rows`), the materialization runs as ONE statically
+    (<= ONE_TASK_ROWS), the materialization runs as ONE statically
     planned single-partition job with broadcast builds disabled; above
     that, the context is a PASSTHROUGH and the adaptive machinery keeps
     the query.
@@ -98,16 +102,16 @@ def dimension_exec(spark, est_rows: int, one_task_rows: int = 4096):
     to a 292k-row per-batch catalog rebuild (the 10k-album catch-up
     drain) measured 0.67 -> 1.49 s/1k albums — at real batch sizes AQE's
     runtime broadcasts and coalescing beat any static guess, so the
-    context must never engage there. est_rows comes from the caller —
-    typically a parquet footer count (sources.tables.table_row_count),
-    never a local[32] constant.
+    context must never engage there. est_rows is the caller's parquet
+    footer count of the subtree's input (sources.tables.table_row_count)
+    — never a probe job, never a local[32] constant.
 
     MUST wrap the plan-compilation points, not just the action:
     `persist()` compiles the physical plan eagerly when called, so a
     persist outside the context freezes the default-conf plan no matter
     what the later count runs under.
     """
-    if est_rows > one_task_rows:
+    if est_rows > ONE_TASK_ROWS:
         yield
         return
     cur = spark.conf.get("spark.sql.shuffle.partitions")
