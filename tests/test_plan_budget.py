@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import contextlib
 import io
-import os
 
 import pytest
 
@@ -127,54 +126,27 @@ SHUFFLE_BUDGET = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(SHUFFLE_BUDGET))
-def test_headline_query_stays_within_shuffle_budget(spark, sf_dir, name):
-    df = QUERIES[name].fn(spark, sf_dir)
+def _shuffles(df) -> int:
+    """Hash-exchange count of the whole formatted plan."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
-    n = buf.getvalue().count("Arguments: hashpartitioning")
+    return buf.getvalue().count("Arguments: hashpartitioning")
+
+
+@pytest.mark.parametrize("name", sorted(SHUFFLE_BUDGET))
+def test_headline_query_stays_within_shuffle_budget(spark, sf_dir, name):
+    n = _shuffles(QUERIES[name].fn(spark, sf_dir))
     assert n <= SHUFFLE_BUDGET[name], (
         f"{name}: {n} shuffles, budget {SHUFFLE_BUDGET[name]} — a new exchange "
         "entered this plan; justify and update the budget or fix the plan"
     )
 
 
-def _live_shuffles(df) -> int:
-    """Hash-exchange count of the plan EXCLUDING cached subtrees.
-
-    The lifecycle halves legitimately reference the persisted release
-    catalog; `explain` prints the InMemoryRelation's full build plan,
-    whose exchanges never re-execute (they're served from cache). Count
-    only exchanges outside those subtrees — simple-mode tree text, skip
-    every line indented deeper than an InMemoryRelation line.
-    """
-    import re
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain()
-
-    def indent(line: str) -> int:
-        return re.match(r"^[\s:+|*-]*", line).end()
-
-    n, skip = 0, None
-    for line in buf.getvalue().splitlines():
-        i = indent(line)
-        if skip is not None:
-            if i > skip:
-                continue
-            skip = None
-        if "InMemoryRelation" in line:
-            skip = i
-            continue
-        if "Exchange hashpartitioning" in line and "ReusedExchange" not in line:
-            n += 1
-    return n
-
-
 # Split budgets for the composed lifecycle: the mid-DAG sink boundary
-# separates two independently-inspectable plans.
+# separates two independently-inspectable plans. Both count the whole
+# plan — the catalog both halves join is a local table, so no part of
+# either plan is served from a cache.
 LIFECYCLE_PRE_SINK_BUDGET = 4   # two-stage similarity's contract (r15: +1
 # counted keyed-fanout exchange replacing the uncounted round-robin that
 # shuffled both chunk matrices per pair — see SHUFFLE_BUDGET note)
@@ -182,42 +154,28 @@ LIFECYCLE_POST_SINK_BUDGET = 2  # grouping-set agg over the CSV read-back
 
 
 def test_lifecycle_halves_stay_within_split_shuffle_budgets(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
     from tlmc_etl_spark.pipelines.lifecycle import (
         lifecycle_post_sink,
         lifecycle_pre_sink,
     )
-    from tlmc_etl_spark.pipelines.metadata import build_catalog
+    from tlmc_etl_spark.plans.curation2 import lifecycle_inputs
     from tlmc_etl_spark.sinks.shards import write_similar_track_shards
-    from tlmc_etl_spark.sources.tables import load_table, table_row_count
 
-    fixtures = os.path.join(os.path.dirname(__file__), "..", "fixtures", "metadata")
-    manifest = spark.read.parquet(os.path.join(fixtures, "manifest.parquet"))
-    probe = spark.read.parquet(os.path.join(fixtures, "probe.parquet"))
-    release = build_catalog(manifest, probe).release.withColumn(
-        "needs_review_reasons", F.concat_ws("|", F.col("needs_review_reasons"))
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    chunks = emb.select(
-        (F.col("vec_id") % 50).alias("track"), "vec_id", F.col("embedding").alias("vec")
-    )
-    manifest_rows = table_row_count(os.path.join(fixtures, "manifest.parquet"))
-    rel, ranked, n_rel = lifecycle_pre_sink(spark, release, chunks, manifest_rows)
-    n_pre = _live_shuffles(ranked)
+    release, chunks, catalog_rows = lifecycle_inputs(spark, sf_dir)
+    rel, ranked, n_rel = lifecycle_pre_sink(spark, release, chunks, catalog_rows)
+    n_pre = _shuffles(ranked)
     assert n_pre <= LIFECYCLE_PRE_SINK_BUDGET, (
-        f"lifecycle pre-sink: {n_pre} live shuffles, budget "
+        f"lifecycle pre-sink: {n_pre} shuffles, budget "
         f"{LIFECYCLE_PRE_SINK_BUDGET}"
     )
     out = str(tmp_path / "shards")
     write_similar_track_shards(ranked, out, n_shards=8)
     stats = lifecycle_post_sink(spark, out, rel, n_rel)
-    n_post = _live_shuffles(stats)
+    n_post = _shuffles(stats)
     assert n_post <= LIFECYCLE_POST_SINK_BUDGET, (
-        f"lifecycle post-sink: {n_post} live shuffles, budget "
+        f"lifecycle post-sink: {n_post} shuffles, budget "
         f"{LIFECYCLE_POST_SINK_BUDGET}"
     )
-    rel.unpersist()
 
 
 def test_dimension_exec_regimes(spark):

@@ -228,52 +228,32 @@ class TestComposedLifecycle:
         )
         assert again == [], f"rerun rewrote shards {again}"
 
-    @staticmethod
-    def _live_lines(plan: str) -> list[str]:
-        """Plan lines OUTSIDE InMemoryRelation subtrees: a persisted
-        reuse table's BUILD plan is printed by explain but served from
-        cache, never re-executed — its Python-eval nodes are not live
-        lineage (same exclusion as test_plan_budget._live_shuffles;
-        surfaced when the Arrow-UDF session flag made the catalog's
-        bracket parsers print as ArrowEvalPython inside the cached
-        release subtree)."""
-        import re
-
-        def indent(line: str) -> int:
-            return re.match(r"^[\s:+|*-]*", line).end()
-
-        live, skip = [], None
-        for line in plan.splitlines():
-            i = indent(line)
-            if skip is not None:
-                if i > skip:
-                    continue
-                skip = None
-            if "InMemoryRelation" in line:
-                skip = i
-                continue
-            live.append(line)
-        return live
-
     def test_stats_lineage_reads_the_sink_not_the_pipeline(self, spark, sf_dir):
-        # The returned stats must hang off the CSV shard sink: a LIVE
+        # The returned stats must hang off the CSV shard sink: a
         # Python-eval node means the similarity subtree would be
         # silently recomputed by every downstream consumer — the
-        # cross-stage regression this gate exists for. (The persisted
-        # catalog's build plan is excluded: printed, not re-executed.)
+        # cross-stage regression this gate exists for.
         plan = plan_of(spark, sf_dir, "lifecycle_similar_shards", mode="simple")
         assert "csv" in plan.lower(), "stats must scan the shard sink"
-        live = "\n".join(self._live_lines(plan))
         for node in ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython",
                      "BatchEvalPython"):
-            assert node not in live, f"{node} in post-sink lineage: similarity recomputed"
+            assert node not in plan, f"{node} in post-sink lineage: similarity recomputed"
 
-    def test_catalog_hydration_broadcasts_cached_catalog(self, spark, sf_dir):
+    def test_catalog_hydration_broadcasts_local_catalog(self, spark, sf_dir):
         plan = plan_of(spark, sf_dir, "lifecycle_similar_shards", mode="simple")
         assert "BroadcastHashJoin" in plan, "24-row catalog must broadcast"
-        # the catalog subtree (manifest scans, vote joins) must be served
-        # from the persisted release table, not recomputed per consumer
-        assert "InMemoryTableScan" in plan, "catalog recomputed instead of reused"
+        # the catalog subtree (manifest scans, vote joins) runs once, into
+        # a local table: the stats plan must not scan its inputs again
+        for src in ("manifest.parquet", "probe.parquet"):
+            assert src not in plan, f"stats plan scans {src}: catalog recomputed"
+
+    def test_lifecycle_queries_leave_the_cache_empty(self, spark, sf_dir):
+        # a plan builder leaves the session as it found it: both
+        # lifecycle forms in one session cache nothing that outlives them
+        spark.catalog.clearCache()
+        for name in ("lifecycle_similar_shards", "lifecycle_shards_prodhash"):
+            QUERIES[name].fn(spark, sf_dir).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     def test_composition_covers_only_clean_releases(self, spark, sf_dir):
         rows = QUERIES["lifecycle_similar_shards"].fn(spark, sf_dir).collect()

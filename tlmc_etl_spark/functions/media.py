@@ -220,28 +220,6 @@ def parse_adts_frames(data: bytes | None) -> list[dict]:
     return frames
 
 
-ADTS_FRAME_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("idx", T.IntegerType()),
-            T.StructField("byte_offset", T.LongType()),
-            T.StructField("byte_length", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("n_blocks", T.IntegerType()),
-            T.StructField("n_samples", T.IntegerType()),
-        ]
-    )
-)
-
-
-def adts_frames_udf():
-    """UDF: ADTS binary column → array<struct> frame index (explode after).
-    Row-at-a-time is licensed here (SURVEY §7.3): a stateful byte-walk
-    over variable-length frames, the same family as the bracket parser."""
-    return F.udf(parse_adts_frames, ADTS_FRAME_SCHEMA)
-
-
 def make_adts_frame(
     payload_len: int, sf_index: int = 6, channels: int = 2, profile: int = 1
 ) -> bytes:

@@ -97,22 +97,19 @@ def extract_brackets_pandas():
     return F.pandas_udf(go, "array<string>")
 
 
-def remove_brackets_pandas():
-    """Arrow-batched remove_brackets (see extract_brackets_pandas)."""
-
-    def go(s: pd.Series) -> pd.Series:
-        return s.map(remove_brackets)
-
-    return F.pandas_udf(go, "string")
-
-
 # ---------------------------------------------------------------------------
 # Unicode match key (song_info_matcher.py:100-107) — pinned to NFKC
-# (SURVEY.md §7.4-2). Same function operators/fuzzy.py uses driver-side.
+# (SURVEY.md §7.4-2). operators/fuzzy.py imports this same function.
 # ---------------------------------------------------------------------------
 
 
 def match_key(s: str | None) -> str:
+    """Unicode-normalized match key: NFKC, lowercase, letters+digits only.
+
+    Reference has two recipes (NFKD vs NFKC+NFD, song_page_scraper.py:93-98,
+    song_info_matcher.py:100-107); SURVEY.md §7.4-2 says pick ONE and pin
+    it — this engine pins NFKC.
+    """
     if s is None:
         return ""
     s = unicodedata.normalize("NFKC", s).lower()

@@ -22,20 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def word_bigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Distinct word-bigram shingles per document (id, shingle)."""
-    ws = df.select(id_col, F.split(F.col(text_col), " ").alias("ws")).filter(F.size("ws") >= 2)
-    return ws.select(
-        id_col,
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(ws) - 1),"
-                " i -> concat(element_at(ws, i), ' ', element_at(ws, i + 1)))"
-            )
-        ).alias("shingle"),
-    ).distinct()
-
-
 def word_bigram_hashes(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Word-bigram shingles per document as 64-bit hashes (id, sh).
 

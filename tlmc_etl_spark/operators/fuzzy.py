@@ -20,19 +20,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tlmc_etl_spark.functions.text import match_key
 from tlmc_etl_spark.operators.assignment import linear_sum_assignment
 from tlmc_etl_spark.tuning import fanout
-
-
-def match_key(s: str) -> str:
-    """Unicode-normalized match key: NFKC, lowercase, letters+digits only.
-
-    Reference has two recipes (NFKD vs NFKC+NFD, song_page_scraper.py:93-98,
-    song_info_matcher.py:100-107); SURVEY.md §7.4-2 says pick ONE and pin
-    it — this engine pins NFKC.
-    """
-    s = unicodedata.normalize("NFKC", s).lower()
-    return "".join(ch for ch in s if ch.isalnum())
 
 
 def similarity(a: str, b: str) -> float:

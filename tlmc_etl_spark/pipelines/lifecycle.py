@@ -19,6 +19,13 @@ wires them together the way the reference does:
      lineage holds only the CSV scan + a broadcast catalog join, never
      the similarity subtree (plan-gated in tests/test_plan_quality.py),
      so downstream consumers can't accidentally recompute the pipeline.
+
+The release catalog feeds both the clean gate (before the sink) and the
+hydration join (after the read-back), each as a broadcast, so the driver
+holds it either way. It is materialized once, as a driver-side local
+table: the catalog subtree runs as one job, and both consumers plan a
+LocalTableScan of its rows. Nothing is cached, so a lifecycle call
+leaves the session's cache as it found it.
 """
 
 from __future__ import annotations
@@ -34,71 +41,58 @@ from tlmc_etl_spark.sinks.shards import (
     write_similar_track_shards,
 )
 
+# recall candidates per track, neighbors kept per track, CSV shards
+K_RECALL = 15
+K_FINAL = 5
+N_SHARDS = 8
+
 
 def lifecycle_pre_sink(
-    spark: SparkSession,
-    release: DataFrame,
-    chunks: DataFrame,
-    catalog_rows: int,
-    track_col: str = "track",
-    vec_col: str = "vec",
-    k_recall: int = 15,
-    k_final: int = 5,
+    spark: SparkSession, release: DataFrame, chunks: DataFrame, catalog_rows: int
 ):
     """Stages 1-2 (catalog gate → similarity): returns (rel, ranked,
     n_rel) WITHOUT writing the sink — `ranked` is the complete pre-sink
     plan, exposed so the shuffle-budget gate can inspect this half of
     the lifecycle on its own (the mid-DAG sink materialization otherwise
     defeats a static exchange count over the composed query)."""
-    def _mk_rel() -> DataFrame:
-        return (
-            release.select(
-                F.col("album_name"),
-                # 24-row dimension: the global sort is a broadcast-sized
-                # no-op; at real scale the release key would ride the track
-                # table instead. bounded_one_partition: real (one-group)
-                # partitionSpec so the fixed-dimension rank stops tripping
-                # WindowExec's warning.
-                F.row_number()
-                .over(
-                    W.partitionBy(
-                        bounded_one_partition(F.length("circle_dir"))
-                    ).orderBy("circle_dir", "album_dir")
-                )
-                .alias("rn"),
-                (F.col("needs_review_reasons") == "").alias("clean"),
+    rel = release.select(
+        F.col("album_name"),
+        # 24-row dimension: the global sort is a broadcast-sized no-op;
+        # at real scale the release key would ride the track table
+        # instead. bounded_one_partition: real (one-group) partitionSpec
+        # so the fixed-dimension rank stops tripping WindowExec's warning.
+        (
+            F.row_number().over(
+                W.partitionBy(
+                    bounded_one_partition(F.length("circle_dir"))
+                ).orderBy("circle_dir", "album_dir")
             )
-            .withColumn("release_idx", F.col("rn") - 1)
-            # Two consumers on opposite sides of the sink boundary (the
-            # clean gate before similarity, hydration after read-back):
-            # persist so the whole catalog subtree — manifest scans, vote
-            # joins — runs once, not once per consumer. LRU-evictable,
-            # repo-standard for tiny multi-scan reuse tables.
-            .persist()
-        )
-
-    # The catalog materialization is a DIMENSION subtree (manifest rows
-    # in, |releases| rows out): planned normally it pays ~14 sequential
-    # one-task jobs — mostly BroadcastExchange builds, one per dimension
-    # join, plus AQE stage materializations (the round-15 "AQE
-    # dimension-floor"). `catalog_rows` bounds the catalog's size — the
-    # manifest's parquet footer count, no job — so under dimension_exec
-    # the whole subtree compiles (persist() freezes the physical plan at
-    # call time, so the context must wrap it) and runs as ONE statically
-    # planned job with size-derived partitions (measured 15 jobs -> 1 job
-    # / 16 chained one-task stages), and the persisted catalog caches in
-    # that compact layout.
+            - 1
+        ).alias("release_idx"),
+        (F.col("needs_review_reasons") == "").alias("clean"),
+    )
+    # The catalog is a DIMENSION subtree (manifest rows in, |releases|
+    # rows out): planned normally it pays ~14 sequential one-task jobs —
+    # mostly BroadcastExchange builds, one per dimension join, plus AQE
+    # stage materializations (the round-15 "AQE dimension-floor").
+    # `catalog_rows` bounds its size — the manifest's parquet footer
+    # count, no job — so under dimension_exec the collect runs as ONE
+    # statically planned job (measured 15 jobs -> 1 job / 16 chained
+    # one-task stages). The rows come back as a local table: the Arrow
+    # round trip plans as a LocalTableScan, so neither consumer re-runs
+    # the subtree and nothing is left cached.
     with dimension_exec(spark, catalog_rows):
-        rel = _mk_rel()
-        n_rel = rel.count()
+        pdf = rel.toPandas()
+    rel = spark.createDataFrame(pdf, rel.schema)
+    n_rel = len(pdf)
     clean_idx = rel.filter("clean").select("release_idx")
     gated = chunks.join(
         F.broadcast(clean_idx),
-        F.pmod(F.col(track_col), F.lit(n_rel)) == F.col("release_idx"),
+        F.pmod(F.col("track"), F.lit(n_rel)) == F.col("release_idx"),
         "left_semi",
     )
     ranked = two_stage_similar_tracks(
-        gated, track_col, vec_col, k_recall=k_recall, k_final=k_final,
+        gated, "track", "vec", k_recall=K_RECALL, k_final=K_FINAL,
         chunk_order_col="vec_id",
     )
     return rel, ranked, n_rel
@@ -134,25 +128,18 @@ def similar_track_lifecycle(
     chunks: DataFrame,
     out_dir: str,
     catalog_rows: int,
-    track_col: str = "track",
-    vec_col: str = "vec",
-    k_recall: int = 15,
-    k_final: int = 5,
-    n_shards: int = 8,
     portable_shards: bool = False,
 ) -> DataFrame:
     """Run catalog-gate → similarity → shard sink; return per-shard stats.
 
     `release` is the gold catalog (must carry circle_dir/album_dir/
-    album_name/needs_review_reasons); `chunks` the (track, order, vec)
+    album_name/needs_review_reasons); `chunks` the (track, vec_id, vec)
     chunk table; `catalog_rows` an upper bound on the catalog's rows
     (the manifest's footer count). Tracks map to releases by track mod
     |catalog| — the synthetic keying the test tables use throughout.
     """
-    rel, ranked, n_rel = lifecycle_pre_sink(
-        spark, release, chunks, catalog_rows, track_col, vec_col, k_recall, k_final
-    )
+    rel, ranked, n_rel = lifecycle_pre_sink(spark, release, chunks, catalog_rows)
     write_similar_track_shards(
-        ranked, out_dir, n_shards=n_shards, portable=portable_shards
+        ranked, out_dir, n_shards=N_SHARDS, portable=portable_shards
     )
     return lifecycle_post_sink(spark, out_dir, rel, n_rel)

@@ -27,7 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tlmc_etl_spark.plans.ext import _plant_near_dups
+from tlmc_etl_spark.plans.ext import _FIXTURE_DIR, _plant_near_dups
 from tlmc_etl_spark.plans.registry import query
 from tlmc_etl_spark.sources.tables import load_table, table_row_count
 
@@ -491,8 +491,44 @@ FROM hydrated GROUP BY shard ORDER BY shard
 """
 
 
+def lifecycle_inputs(spark: SparkSession, sf_dir: str):
+    """(release, chunks, catalog_rows) for the composed lifecycle: the
+    fixture manifest's gold catalog with its review reasons joined to a
+    string, the embeddings as the (track, vec_id, vec) chunk table with
+    tracks = vec_id % 50, and the manifest's footer row count, which
+    bounds the catalog's size (tuning.dimension_exec)."""
+    from tlmc_etl_spark.pipelines.metadata import build_catalog
+
+    manifest_path = os.path.join(_FIXTURE_DIR, "manifest.parquet")
+    manifest = spark.read.parquet(manifest_path)
+    probe = spark.read.parquet(os.path.join(_FIXTURE_DIR, "probe.parquet"))
+    release = build_catalog(manifest, probe).release.withColumn(
+        "needs_review_reasons", F.concat_ws("|", F.col("needs_review_reasons"))
+    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    chunks = emb.select(
+        (F.col("vec_id") % 50).alias("track"), "vec_id", F.col("embedding").alias("vec")
+    )
+    return release, chunks, table_row_count(manifest_path)
+
+
+def lifecycle_shards(
+    spark: SparkSession, sf_dir: str, scratch_kind: str, portable_shards: bool
+) -> DataFrame:
+    """The composed lifecycle over lifecycle_inputs, sinking its CSV
+    shards under the `scratch_kind` scratch directory."""
+    from tlmc_etl_spark.pipelines.lifecycle import similar_track_lifecycle
+    from tlmc_etl_spark.scratch import scratch_dir
+
+    release, chunks, catalog_rows = lifecycle_inputs(spark, sf_dir)
+    out_dir = scratch_dir(spark, scratch_kind, sf_dir)
+    return similar_track_lifecycle(
+        spark, release, chunks, out_dir, catalog_rows, portable_shards=portable_shards
+    )
+
+
 @query("lifecycle_similar_shards", oracle=_lifecycle_xengine_oracle())
-def lifecycle_shards_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
+def lifecycle_similar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed catalog → review-gate → two-stage similarity → CSV
     shard sink → read-back lifecycle, cross-engine oracle form: same
     pipeline as lifecycle_shards_prodhash but the shard mapping uses the
@@ -506,24 +542,8 @@ def lifecycle_shards_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
     value check. Reference lifecycle: STEPS.md review loop →
     precompute_similar_tracks.py:244-275 → SimilarTrackProcessor.cs:62-67.
     """
-    from tlmc_etl_spark.pipelines.lifecycle import similar_track_lifecycle
-    from tlmc_etl_spark.pipelines.metadata import build_catalog
-    from tlmc_etl_spark.plans.ext import _FIXTURE_DIR
-    from tlmc_etl_spark.scratch import scratch_dir
-
-    manifest = spark.read.parquet(os.path.join(_FIXTURE_DIR, "manifest.parquet"))
-    probe = spark.read.parquet(os.path.join(_FIXTURE_DIR, "probe.parquet"))
-    release = build_catalog(manifest, probe).release.withColumn(
-        "needs_review_reasons", F.concat_ws("|", F.col("needs_review_reasons"))
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    chunks = emb.select(
-        (F.col("vec_id") % 50).alias("track"), "vec_id", F.col("embedding").alias("vec")
-    )
-    out_dir = scratch_dir(spark, "lifecycle_shards_portable", sf_dir)
-    manifest_rows = table_row_count(os.path.join(_FIXTURE_DIR, "manifest.parquet"))
-    return similar_track_lifecycle(
-        spark, release, chunks, out_dir, manifest_rows, portable_shards=True
+    return lifecycle_shards(
+        spark, sf_dir, "lifecycle_shards_portable", portable_shards=True
     )
 
 

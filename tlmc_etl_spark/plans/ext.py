@@ -1810,10 +1810,11 @@ def minhash_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("lifecycle_shards_prodhash")
-def lifecycle_similar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+def lifecycle_shards_prodhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed §3.1→§3.2 lifecycle as one bench entry: manifest →
     release catalog → review-gate → two-stage similarity → CSV shard sink
-    → read-back + hydrated per-shard stats (pipelines/lifecycle.py).
+    → read-back + hydrated per-shard stats (pipelines/lifecycle.py), with
+    the production xxhash64 shard mapping.
 
     Exists so cross-stage plan regressions are MEASURED, not inferred
     from per-stage benches: the catalog gate rides into the similarity
@@ -1825,24 +1826,9 @@ def lifecycle_similar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     STEPS.md review loop → precompute_similar_tracks.py:244-275 →
     SimilarTrackProcessor.cs:62-67.
     """
-    from tlmc_etl_spark.pipelines.lifecycle import similar_track_lifecycle
-    from tlmc_etl_spark.pipelines.metadata import build_catalog
-    from tlmc_etl_spark.scratch import scratch_dir
+    from tlmc_etl_spark.plans.curation2 import lifecycle_shards
 
-    manifest = spark.read.parquet(os.path.join(_FIXTURE_DIR, "manifest.parquet"))
-    probe = spark.read.parquet(os.path.join(_FIXTURE_DIR, "probe.parquet"))
-    release = build_catalog(manifest, probe).release.withColumn(
-        "needs_review_reasons", F.concat_ws("|", F.col("needs_review_reasons"))
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    chunks = emb.select(
-        (F.col("vec_id") % 50).alias("track"), "vec_id", F.col("embedding").alias("vec")
-    )
-    out_dir = scratch_dir(spark, "lifecycle_shards", sf_dir)
-    # the release dimension has at most |manifest| rows: the manifest's
-    # footer count sizes the catalog materialization (tuning.dimension_exec)
-    manifest_rows = table_row_count(os.path.join(_FIXTURE_DIR, "manifest.parquet"))
-    return similar_track_lifecycle(spark, release, chunks, out_dir, manifest_rows)
+    return lifecycle_shards(spark, sf_dir, "lifecycle_shards", portable_shards=False)
 
 
 _MINHASH_XENGINE_ORACLE = """

@@ -12,9 +12,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_resources() -> tuple[str, str, str]:
+    """(cores, shuffle partitions, driver memory) for a local session.
+
+    Each comes from the host unless its environment variable is set:
+    SPARK_GRAFT_CPUS defaults to the cores this process may run on,
+    SPARK_SHUFFLE_PARTITIONS to that core count, and SPARK_DRIVER_MEMORY
+    to half the physical memory, capped at 48g.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    shuffle = os.environ.get("SPARK_SHUFFLE_PARTITIONS") or cpus
+    half_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    memory = os.environ.get("SPARK_DRIVER_MEMORY") or f"{min(max(half_gb, 1), 48)}g"
+    return cpus, shuffle, memory
+
+
 def get_spark(app_name: str = "tlmc-etl-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle = os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus)
+    cpus, shuffle, memory = local_resources()
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -28,7 +42,7 @@ def get_spark(app_name: str = "tlmc-etl-spark") -> SparkSession:
         # CPU-heavy Python stages opt out per-plan via tuning.fanout(),
         # whose user-specified repartition count AQE never coalesces.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", memory)
         .config("spark.sql.session.timeZone", "UTC")
         # events.parquet may carry TIMESTAMP(NANOS); read it as long once
         # per session (sources/tables._load_events converts it).

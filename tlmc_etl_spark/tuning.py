@@ -106,10 +106,10 @@ def dimension_exec(spark, est_rows: int):
     footer count of the subtree's input (sources.tables.table_row_count)
     — never a probe job, never a local[32] constant.
 
-    MUST wrap the plan-compilation points, not just the action:
-    `persist()` compiles the physical plan eagerly when called, so a
-    persist outside the context freezes the default-conf plan no matter
-    what the later count runs under.
+    The context wraps the action that materializes the subtree (the
+    lifecycle's catalog collect): the physical plan is compiled when
+    the action runs, so the action must run inside the context for the
+    one-task regime to apply.
     """
     if est_rows > ONE_TASK_ROWS:
         yield

@@ -7,7 +7,8 @@ Writes OUTDIR/<query>_<SUFFIX>.txt for each named query (all bench
 HEADLINE queries when none are named). The plan is the pre-execution
 formatted physical plan (AdaptiveSparkPlan isFinalPlan=false when AQE
 applies) built against $SPARK_GRAFT_SF_DIR — the artifact the round's
-plan-shape claims are checked against.
+plan-shape claims are checked against. A query whose plan cannot build
+gets a PLAN BUILD FAILED dump, and the run exits non-zero naming it.
 """
 
 from __future__ import annotations
@@ -42,16 +43,20 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
+    failed = []
     for name in names:
         try:
             df = QUERIES[name].fn(spark, sf_dir)
             text = explain_formatted(df)
         except Exception as exc:  # a plan that cannot build is itself evidence
             text = f"PLAN BUILD FAILED: {exc!r}\n"
+            failed.append(name)
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(text)
         print(f"wrote {path} ({len(text)} bytes)", file=sys.stderr)
+    if failed:
+        sys.exit(f"plan build failed for: {', '.join(failed)}")
 
 
 if __name__ == "__main__":

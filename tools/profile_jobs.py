@@ -3,7 +3,8 @@
 At sf0.1 most headline walls are scheduler-floor-bound (sf0.01 wall ~=
 sf0.1 wall), so the optimization lever is the NUMBER of sequential Spark
 jobs a query schedules, not bytes. This tool measures it: for each named
-query, one warm pass at sf0.001, then a timed pass at $SPARK_GRAFT_SF_DIR
+query, one warm pass at sf0.001 (bench.warm_suite, which names a query
+that fails there), then a timed pass at $SPARK_GRAFT_SF_DIR
 inside a job group, reporting wall seconds and the job count from the
 status tracker.
 
@@ -18,6 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import warm_suite
 from tlmc_etl_spark.plans import QUERIES
 from tlmc_etl_spark.session import get_spark
 
@@ -45,16 +47,12 @@ def main() -> None:
     verbose = "-v" in argv
     names = [a for a in argv if a != "-v"] or DEFAULT
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    warm_dir = "/root/testdata/sf0.001"
     spark = get_spark("profile-jobs")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     for name in names:
-        try:
-            QUERIES[name].fn(spark, warm_dir).count()
-        except Exception:
-            pass
+        warm_suite(spark, [name])
         spark.catalog.clearCache()
         group = f"prof-{name}"
         sc.setJobGroup(group, name)
