@@ -202,7 +202,7 @@ def test_lsh_hi_oracle_knobs_match_autosize():
     assert planes == _LSH_HI_PLANES, (
         f"auto-sized planes at sf0.01 is {planes}; oracle embeds {_LSH_HI_PLANES}"
     )
-    tables = auto_n_tables(planes, 0.9, 0.95)
+    tables = auto_n_tables(planes, 0.9)
     assert tables == _LSH_HI_TABLES, (
         f"auto-sized tables at sf0.01 is {tables}; oracle embeds {_LSH_HI_TABLES}"
     )
@@ -500,7 +500,7 @@ class TestAutoNTables:
 
         # key widths as auto-sized for corpora from 2k to 1e10 rows
         for n_planes in range(8, 31):
-            L = auto_n_tables(n_planes, 0.9, recall_target=0.95)
+            L = auto_n_tables(n_planes, 0.9)
             P = table_catch_probability(n_planes, 0.9)
             assert (1 - P) ** L <= 0.05 + 1e-12, (n_planes, L)
             # and not wastefully deep: one fewer table would miss target
@@ -607,20 +607,20 @@ def test_semantic_dedup_finds_cohabiting_planted_pairs(spark):
         assert by_id.loc[v, "dup_of"] <= v - 1_000_000_000
 
 
-def test_lsh_topk_routes_to_ivf_past_corpus_ceiling(spark, sf_dir):
+def test_lsh_topk_routes_to_ivf_past_corpus_ceiling(spark, sf_dir, monkeypatch):
     """Round-15 scaling fix: the fixed-plane LSH top-k is quadratic in
     corpus size (the sf10 point measured 71 s at 8k vectors), so past
     LSH_TOPK_CORPUS_CEILING the operator must serve through the IVF
     quantizer — same output contract, occupancy-sized cells. Forced
     here by lowering the ceiling under the 500-row corpus."""
+    import tlmc_etl_spark.operators.vectors as vectors
     from tlmc_etl_spark.operators.vectors import ivf_topk, lsh_topk
     from tlmc_etl_spark.sources.tables import load_table, table_row_count
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = table_row_count(f"{sf_dir}/embeddings.parquet")
-    routed = lsh_topk(
-        emb, "vec_id", "embedding", n, k=10, corpus_ceiling=100
-    ).orderBy("anchor", "rank")
+    monkeypatch.setattr(vectors, "LSH_TOPK_CORPUS_CEILING", 100)
+    routed = lsh_topk(emb, "vec_id", "embedding", n).orderBy("anchor", "rank")
     want = ivf_topk(
         emb, "vec_id", "embedding", k=10, n_centroids=16, n_probe=4
     ).orderBy("anchor", "rank")
@@ -629,8 +629,10 @@ def test_lsh_topk_routes_to_ivf_past_corpus_ceiling(spark, sf_dir):
     ]
     # below the ceiling the LSH form is untouched (its SQL-replay oracle
     # stays the value check at the driver sf)
-    lsh = lsh_topk(emb, "vec_id", "embedding", n, k=10)
-    forced = lsh_topk(emb, "vec_id", "embedding", n, k=10, corpus_ceiling=None)
+    monkeypatch.undo()
+    lsh = lsh_topk(emb, "vec_id", "embedding", n)
+    monkeypatch.setattr(vectors, "LSH_TOPK_CORPUS_CEILING", float("inf"))
+    forced = lsh_topk(emb, "vec_id", "embedding", n)
     assert sorted(map(tuple, lsh.collect())) == sorted(map(tuple, forced.collect()))
 
 
@@ -651,7 +653,7 @@ def test_lsh_topk_ivf_takeover_recall_above_lsh_floor(spark):
     df = spark.createDataFrame(
         [(i, [float(x) for x in M[i]]) for i in range(n)], "id long, vec array<double>"
     )
-    routed = lsh_topk(df, "id", "vec", n, k=10)
+    routed = lsh_topk(df, "id", "vec", n)
     by_anchor: dict[int, set[int]] = {}
     for r in routed.collect():
         by_anchor.setdefault(r["anchor"], set()).add(r["neighbor"])

@@ -120,19 +120,20 @@ class TestThreeScore:
         assert abs(raw - 1.0) < 1e-9
         assert abs(kde - 1.0) < 1e-9
 
-    def test_results_stable_under_repartition(self, spark, sf_dir, result):
+    def test_results_stable_under_repartition(self, spark, sf_dir, result, monkeypatch):
         """Subsample picks key on the explicit order column — layout must
         not change any score (pad forced below group size to bind)."""
-        from tlmc_etl_spark.operators.group_similarity import three_score_group_similarity
+        import tlmc_etl_spark.operators.group_similarity as gs
         from tlmc_etl_spark.sources.tables import load_table
 
+        monkeypatch.setattr(gs, "PAD", 4)
+        monkeypatch.setattr(gs, "calibrate_pair_gamma", lambda pairs: 25.0)
         emb = load_table(spark, sf_dir, "embeddings")
         members = emb.select("label", "vec_id", "embedding")
         outs = []
         for n_parts in (2, 5):
-            df = three_score_group_similarity(
-                members.repartition(n_parts), "label", "embedding",
-                order_col="vec_id", pad=4, gamma=25.0,
+            df = gs.three_score_group_similarity(
+                members.repartition(n_parts), "label", "embedding", order_col="vec_id"
             )
             outs.append(sorted(tuple(r) for r in df.collect()))
         assert outs[0] == outs[1]

@@ -32,11 +32,11 @@ def test_delta_actually_moves_the_changed_vectors(spark, sf_dir):
     assert changed == set(_SIM_DELTA_TRACKS), changed
     old = {
         r["track"]: r["pooled"]
-        for r in pooled_unit_mean(chunks.filter(~late), "track", "vec").collect()
+        for r in pooled_unit_mean(chunks.filter(~late)).collect()
     }
     new = {
         r["track"]: r["pooled"]
-        for r in pooled_unit_mean(chunks, "track", "vec").collect()
+        for r in pooled_unit_mean(chunks).collect()
     }
     for t in sorted(changed):
         diff = max(abs(a - b) for a, b in zip(old[t], new[t]))

@@ -18,8 +18,8 @@ def _build(spark, sf_dir):
     rows = emb.select("vec_id", "embedding").orderBy(F.xxhash64("vec_id")).limit(500).collect()
     M = np.array([r["embedding"] for r in rows], dtype=np.float64)
     Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-    coarse = kmeans_centroids(Mn, 8, seed=42)
-    codebooks = pq_train_codebooks(emb, "vec_id", "embedding", m=8, k=16)
+    coarse = kmeans_centroids(Mn, 8)
+    codebooks = pq_train_codebooks(emb, "vec_id", "embedding")
     codes = pq_encode(emb, "vec_id", "embedding", codebooks)
     return emb, coarse, codebooks, codes
 

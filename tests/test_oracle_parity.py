@@ -1,28 +1,18 @@
 """t2 correctness gate: every registered relational query must match its
 DuckDB oracle at the test scale factor — the same comparison the driver
-runs (column names sorted, row-order-insensitive, value equality).
+runs (column names sorted, row-order-insensitive, value equality, and an
+int column never matching a float one), through the one comparison the
+oracle harness uses (tools/check_oracle.compare).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 
 from tlmc_etl_spark.plans import QUERIES
+from tools.check_oracle import compare
 
 RELATIONAL = [n for n, q in QUERIES.items() if q.oracle is not None]
-
-
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        if str(df[c].dtype).lower().startswith(("int", "uint")):
-            df[c] = df[c].astype("float64")
-        if str(df[c].dtype).startswith("datetime"):
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
 @pytest.mark.parametrize("name", RELATIONAL)
@@ -47,18 +37,7 @@ def test_matches_oracle(name, spark, duck, sf_dir):
         sf_dir = q.oracle_sf_dir
     got = q.fn(spark, sf_dir).toPandas()
     want = duck.execute(q.oracle).fetchdf()
-    assert sorted(got.columns) == sorted(want.columns), "schema mismatch"
-    assert len(got) == len(want), f"row count {len(got)} != {len(want)}"
-    gn, wn = normalize(got), normalize(want)
-    for c in gn.columns:
-        a, b = gn[c], wn[c]
-        if a.dtype == "float64" or b.dtype == "float64":
-            aa = pd.to_numeric(a, errors="coerce")
-            bb = pd.to_numeric(b, errors="coerce")
-            ok = (aa.isna() & bb.isna()) | (abs(aa - bb) <= 1e-9)
-        else:
-            ok = (a.isna() & b.isna()) | (a == b)
-        assert ok.all(), f"col {c}: first mismatch row {(~ok).idxmax()}"
+    assert compare(name, got, want) == "OK"
 
 
 EXT = [n for n, q in QUERIES.items() if q.oracle is None]

@@ -13,6 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+import tlmc_etl_spark.operators.pq as pq
 from tlmc_etl_spark.operators.pq import (
     pq_adc_topk,
     pq_encode,
@@ -36,7 +37,7 @@ def np_corpus(spark, sf_dir):
 
 
 def test_encode_is_deterministic_and_in_range(spark, emb):
-    cb = pq_train_codebooks(emb, "vec_id", "embedding", m=8, k=16)
+    cb = pq_train_codebooks(emb, "vec_id", "embedding")
     a = {r["vec_id"]: r["codes"] for r in pq_encode(emb, "vec_id", "embedding", cb).collect()}
     b = {r["vec_id"]: r["codes"] for r in pq_encode(emb, "vec_id", "embedding", cb).collect()}
     assert a == b, "same codebooks must encode identically across runs"
@@ -45,13 +46,15 @@ def test_encode_is_deterministic_and_in_range(spark, emb):
         assert all(0 <= c < 16 for c in codes)
 
 
-def test_adc_score_equals_decode_then_dot(spark, emb, np_corpus):
+def test_adc_score_equals_decode_then_dot(spark, emb, np_corpus, monkeypatch):
     # the ADC lookup-table path is an EXACT rewrite of dot(anchor,
     # decode(codes)) — any drift is a real bug, not quantization loss
     ids, Mn = np_corpus
-    cb = pq_train_codebooks(emb, "vec_id", "embedding", m=8, k=16)
+    cb = pq_train_codebooks(emb, "vec_id", "embedding")
     codes = {r["vec_id"]: np.array(r["codes"]) for r in pq_encode(emb, "vec_id", "embedding", cb).collect()}
-    got = pq_adc_topk(emb, "vec_id", "embedding", k_neighbors=5, n_anchors=5).collect()
+    monkeypatch.setattr(pq, "K_NEIGHBORS", 5)
+    monkeypatch.setattr(pq, "ADC_N_ANCHORS", 5)
+    got = pq_adc_topk(emb, "vec_id", "embedding").collect()
     assert got, "no ADC rows produced"
     m, k, ds = cb.shape
     for r in got:
@@ -62,9 +65,10 @@ def test_adc_score_equals_decode_then_dot(spark, emb, np_corpus):
         )
 
 
-def test_reconstruction_quality_floor_and_improves_with_k(spark, emb):
-    cb16 = pq_train_codebooks(emb, "vec_id", "embedding", m=8, k=16)
-    cb64 = pq_train_codebooks(emb, "vec_id", "embedding", m=8, k=64)
+def test_reconstruction_quality_floor_and_improves_with_k(spark, emb, monkeypatch):
+    cb16 = pq_train_codebooks(emb, "vec_id", "embedding")
+    monkeypatch.setattr(pq, "PQ_N_CODES", 64)
+    cb64 = pq_train_codebooks(emb, "vec_id", "embedding")
     r16 = pq_reconstruction(emb, "vec_id", "embedding", cb16).agg(
         F.mean("recon_cosine").alias("m")
     ).first()["m"]
@@ -79,7 +83,7 @@ def test_adc_recall_beats_random_by_two_orders(spark, emb, np_corpus):
     ids, Mn = np_corpus
     S = Mn @ Mn.T
     np.fill_diagonal(S, -np.inf)
-    topk = pq_adc_topk(emb, "vec_id", "embedding", k_neighbors=10, n_anchors=20).collect()
+    topk = pq_adc_topk(emb, "vec_id", "embedding").collect()
     by_anchor: dict[int, set[int]] = {}
     for r in topk:
         by_anchor.setdefault(r["anchor"], set()).add(r["neighbor"])
@@ -103,7 +107,7 @@ def test_ivf_pq_composition_recall_and_shape(spark, emb, np_corpus):
     ids, Mn = np_corpus
     S = Mn @ Mn.T
     np.fill_diagonal(S, -np.inf)
-    got = ivf_pq_topk(emb, "vec_id", "embedding", k_neighbors=10).collect()
+    got = ivf_pq_topk(emb, "vec_id", "embedding").collect()
     by_anchor: dict[int, list] = {}
     for r in got:
         by_anchor.setdefault(r["anchor"], []).append(r)
@@ -131,8 +135,8 @@ class TestOPQRotation:
     def test_rotation_is_orthogonal_and_deterministic(self, spark, emb):
         from tlmc_etl_spark.operators.pq import opq_rotation
 
-        R1 = opq_rotation(emb, "vec_id", "embedding", m=8)
-        R2 = opq_rotation(emb, "vec_id", "embedding", m=8)
+        R1 = opq_rotation(emb, "vec_id", "embedding")
+        R2 = opq_rotation(emb, "vec_id", "embedding")
         assert np.allclose(R1, R2), "rotation must be deterministic"
         d = R1.shape[0]
         assert np.allclose(R1 @ R1.T, np.eye(d), atol=1e-9)
@@ -141,7 +145,7 @@ class TestOPQRotation:
         from tlmc_etl_spark.operators.pq import opq_rotation, rotate_vectors
 
         ids, Mn = np_corpus
-        R = opq_rotation(emb, "vec_id", "embedding", m=8)
+        R = opq_rotation(emb, "vec_id", "embedding")
         rot = {
             r["vec_id"]: np.array(r["embedding"])
             for r in rotate_vectors(emb, "vec_id", "embedding", R).collect()
@@ -171,7 +175,7 @@ class TestOPQRotation:
         C = np.cov(Mn, rowvar=False)
         eigvals, eigvecs = np.linalg.eigh(C)
         blocked = Mn @ eigvecs[:, np.argsort(-eigvals)]  # top-8 together
-        R = opq_rotation(emb, "vec_id", "embedding", m=8)
+        R = opq_rotation(emb, "vec_id", "embedding")
         dealt = Mn @ R.T
         assert spread(dealt) < spread(blocked), (
             f"dealt spread {spread(dealt):.3f} must beat blocked {spread(blocked):.3f}"
@@ -187,13 +191,13 @@ class TestOPQRotation:
             rotate_vectors,
         )
 
-        cb = pq_train_codebooks(emb, "vec_id", "embedding", m=8, k=16)
+        cb = pq_train_codebooks(emb, "vec_id", "embedding")
         plain = pq_reconstruction(emb, "vec_id", "embedding", cb).agg(
             SF.mean("recon_cosine")
         ).first()[0]
-        R = opq_rotation(emb, "vec_id", "embedding", m=8)
+        R = opq_rotation(emb, "vec_id", "embedding")
         rotated = rotate_vectors(emb, "vec_id", "embedding", R)
-        cb_r = pq_train_codebooks(rotated, "vec_id", "embedding", m=8, k=16)
+        cb_r = pq_train_codebooks(rotated, "vec_id", "embedding")
         opq = pq_reconstruction(rotated, "vec_id", "embedding", cb_r).agg(
             SF.mean("recon_cosine")
         ).first()[0]

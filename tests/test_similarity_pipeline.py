@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import tlmc_etl_spark.pipelines.similarity as sim
 from tlmc_etl_spark.operators.vectors import chamfer_numpy
 from tlmc_etl_spark.pipelines.similarity import (
     pooled_unit_mean,
@@ -51,7 +52,7 @@ def numpy_ref(sf_dir):
 
 @pytest.fixture(scope="module")
 def result(spark, chunked):
-    out = two_stage_similar_tracks(chunked, "track", "vec", K_RECALL, K_FINAL).collect()
+    out = two_stage_similar_tracks(chunked).collect()
     return out
 
 
@@ -79,7 +80,7 @@ class TestStructure:
 class TestDifferential:
     def test_pooled_matches_numpy(self, spark, chunked, numpy_ref):
         _, pooled_ref = numpy_ref
-        got = {r["track"]: np.array(r["pooled"]) for r in pooled_unit_mean(chunked, "track", "vec").collect()}
+        got = {r["track"]: np.array(r["pooled"]) for r in pooled_unit_mean(chunked).collect()}
         for t, v in pooled_ref.items():
             assert np.abs(got[t] - v).max() < 1e-9
 
@@ -89,16 +90,15 @@ class TestDifferential:
             ref = chamfer_numpy(chunk_sets[r["anchor"]], chunk_sets[r["neighbor"]])
             assert abs(r["score"] - ref) < 5e-3  # the reference's gate bound
 
-    def test_results_stable_under_repartition(self, spark, chunked):
+    def test_results_stable_under_repartition(self, spark, chunked, monkeypatch):
         """Determinism contract: the chunk cap must select the same chunks
         no matter the partition layout (SURVEY §7.4-1). Run with a binding
         cap (4 < ~10 chunks/track) under two different layouts."""
+        monkeypatch.setattr(sim, "CHUNK_CAP", 4)
         outs = []
         for n_parts in (3, 7):
             df = chunked.repartition(n_parts)
-            rows = two_stage_similar_tracks(
-                df, "track", "vec", K_RECALL, K_FINAL, chunk_cap=4, chunk_order_col="vec_id"
-            ).collect()
+            rows = two_stage_similar_tracks(df).collect()
             outs.append(sorted((r["anchor"], r["rank"], r["neighbor"], r["score"]) for r in rows))
         assert outs[0] == outs[1]
 
@@ -119,23 +119,24 @@ class TestDifferential:
         assert agree >= int(0.9 * len(ids))  # ties at 6dp rounding may flip order
 
 
-def test_tiled_recall_equals_single_tile(spark, chunked):
-    # the scale mechanism itself: with tile_rows far below the corpus the
+def test_tiled_recall_equals_single_tile(spark, chunked, monkeypatch):
+    # the scale mechanism itself: with TILE_ROWS far below the corpus the
     # candidate side splits into many hash tiles, each scored against the
     # streaming anchors and merged — the result must be EXACTLY the
     # single-tile (all-in-one-broadcast) answer, anchors, neighbors,
     # scores and all. Also drives the multi-broadcast release path.
     from tlmc_etl_spark.pipelines.similarity import cosine_recall
 
-    pooled = pooled_unit_mean(chunked, "track", "vec").persist()
+    pooled = pooled_unit_mean(chunked).persist()
     try:
         one = {
             (r["anchor"], r["neighbor"]): r["recall_score"]
-            for r in cosine_recall(pooled, K_RECALL, N_TRACKS).collect()
+            for r in cosine_recall(pooled, N_TRACKS).collect()
         }
+        monkeypatch.setattr(sim, "TILE_ROWS", 7)
         many = {
             (r["anchor"], r["neighbor"]): r["recall_score"]
-            for r in cosine_recall(pooled, K_RECALL, N_TRACKS, tile_rows=7).collect()
+            for r in cosine_recall(pooled, N_TRACKS).collect()
         }
         assert one == many, "tiling must be invisible in results"
         assert len({a for a, _ in one}) == N_TRACKS
@@ -154,18 +155,20 @@ class TestRecallSelfSelection:
         # while the corpus fits in <= EXACT_TILE_CEILING driver tiles.
         from tlmc_etl_spark.pipelines.similarity import (
             EXACT_TILE_CEILING,
+            TILE_ROWS,
             choose_recall_strategy,
         )
 
-        tile = 200_000
-        assert choose_recall_strategy(1, tile) == "exact"
-        assert choose_recall_strategy(EXACT_TILE_CEILING * tile, tile) == "exact"
-        assert choose_recall_strategy(EXACT_TILE_CEILING * tile + 1, tile) == "ivf"
+        tile = TILE_ROWS
+        assert tile == 200_000
+        assert choose_recall_strategy(1) == "exact"
+        assert choose_recall_strategy(EXACT_TILE_CEILING * tile) == "exact"
+        assert choose_recall_strategy(EXACT_TILE_CEILING * tile + 1) == "ivf"
         # the 100 TB regime: a billion-track corpus must never take the
         # exact path (it would mean 5,000 driver collects)
-        assert choose_recall_strategy(1_000_000_000, tile) == "ivf"
+        assert choose_recall_strategy(1_000_000_000) == "ivf"
 
-    def test_ivf_arm_holds_recall_floor(self, spark):
+    def test_ivf_arm_holds_recall_floor(self, spark, monkeypatch):
         # Force the IVF arm (ceiling 0) on a corpus with PLANTED cluster
         # structure and gate measured recall@K against the exact arm.
         # Structure is the honest regime: on structureless (uniform)
@@ -196,12 +199,12 @@ class TestRecallSelfSelection:
         try:
             exact = {}
             n = n_clusters * per_cluster
-            for r in cosine_recall(pooled, K_RECALL, n).collect():
+            for r in cosine_recall(pooled, n).collect():
                 exact.setdefault(r["anchor"], set()).add(r["neighbor"])
             approx = {}
-            for r in recall_candidates(
-                pooled, K_RECALL, n, exact_tile_ceiling=0, target_cell=25
-            ).collect():
+            monkeypatch.setattr(sim, "EXACT_TILE_CEILING", 0)
+            monkeypatch.setattr(sim, "IVF_TARGET_CELL", 25)
+            for r in recall_candidates(pooled, n).collect():
                 approx.setdefault(r["anchor"], set()).add(r["neighbor"])
             assert set(approx) == set(exact), "every anchor must be recalled"
             recalls = [
@@ -216,14 +219,10 @@ class TestRecallSelfSelection:
         # End-to-end through the pipeline with the takeover forced: the
         # rerank contract (dense ranks, k_final per anchor, no self
         # pairs) must hold identically in the IVF regime.
-        import tlmc_etl_spark.pipelines.similarity as sim
-
         orig = sim.choose_recall_strategy
         sim.choose_recall_strategy = lambda n, *a, **kw: "ivf"
         try:
-            rows = two_stage_similar_tracks(
-                chunked, "track", "vec", K_RECALL, K_FINAL
-            ).collect()
+            rows = two_stage_similar_tracks(chunked).collect()
         finally:
             sim.choose_recall_strategy = orig
         by_anchor: dict[int, list[int]] = {}
@@ -307,8 +306,9 @@ def test_recall_stage_runs_no_count_job(spark, monkeypatch):
         count_calls.append(1)
         return orig_count(self)
 
+    monkeypatch.setattr(sim, "K_RECALL", 5)
     monkeypatch.setattr(DataFrame, "count", spying_count)
-    out = recall_candidates(pooled, 5, 40).collect()
+    out = recall_candidates(pooled, 40).collect()
     assert len(out) > 0
     assert not count_calls, (
         f"recall stage ran {len(count_calls)} count() job(s)"
@@ -316,7 +316,7 @@ def test_recall_stage_runs_no_count_job(spark, monkeypatch):
 
 
 @pytest.mark.parametrize("weighted", [False, True])
-def test_rerank_rejects_duplicate_chunk_set_rows(spark, weighted):
+def test_rerank_rejects_duplicate_chunk_set_rows(spark, weighted, monkeypatch):
     """chunk_sets is one row per track. A duplicated anchor row must fail
     loudly and name the anchor, not score only its first copy — an
     explicit raise, so the check also holds under `python -O`."""
@@ -334,13 +334,14 @@ def test_rerank_rejects_duplicate_chunk_set_rows(spark, weighted):
         [(1, 2, 0.9), (1, 3, 0.8), (2, 1, 0.9), (3, 1, 0.7)],
         "anchor long, neighbor long, recall_score double",
     )
-    assert chamfer_rerank(recall, sets, 2).count() == 4
+    monkeypatch.setattr(sim, "K_FINAL", 2)
+    assert chamfer_rerank(recall, sets).count() == 4
     dup = sets.unionByName(sets.filter("track = 1"))
     with pytest.raises(PythonException, match="ValueError: chunk_sets has 2 rows for anchor 1"):
-        chamfer_rerank(recall, dup, 2).collect()
+        chamfer_rerank(recall, dup).collect()
 
 
-def test_rerank_skips_an_anchor_without_recall_pairs(spark):
+def test_rerank_skips_an_anchor_without_recall_pairs(spark, monkeypatch):
     """A chunk_sets track that is never a recall anchor scores nothing as
     an anchor. Without the semi-join onto recall anchors, its cogroup key
     had an empty pairs side and the Python worker crashed in the Arrow
@@ -356,5 +357,6 @@ def test_rerank_skips_an_anchor_without_recall_pairs(spark):
         [(1, 2, 0.9), (1, 3, 0.8), (2, 1, 0.9)],
         "anchor long, neighbor long, recall_score double",
     )
-    got = chamfer_rerank(recall, sets, 2).select("anchor", "neighbor").collect()
+    monkeypatch.setattr(sim, "K_FINAL", 2)
+    got = chamfer_rerank(recall, sets).select("anchor", "neighbor").collect()
     assert sorted(tuple(r) for r in got) == [(1, 2), (1, 3), (2, 1)]

@@ -46,10 +46,9 @@ def word_bigram_hashes(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    shingles: DataFrame, id_col: str, n_hashes: int = 64, shingle_col: str = "sh"
-) -> DataFrame:
-    """One row per id with `sig` array<long> of n_hashes min-hashes.
+def minhash_signatures(shingles: DataFrame, id_col: str, n_hashes: int = 64) -> DataFrame:
+    """One row per id with `sig` array<long> of n_hashes min-hashes of
+    the shingle-hash column `sh`.
 
     Each permutation h_i is xxhash64 seeded by the permutation index —
     deterministic cluster-wide (SURVEY.md §4: deterministic routing). The
@@ -59,7 +58,7 @@ def minhash_signatures(
     this is one scan + one small shuffle at any corpus size.
     """
     mins = [
-        F.min(F.xxhash64(F.lit(i), F.col(shingle_col))).alias(f"h{i}")
+        F.min(F.xxhash64(F.lit(i), F.col("sh"))).alias(f"h{i}")
         for i in range(n_hashes)
     ]
     sigs = shingles.groupBy(id_col).agg(*mins)
@@ -155,9 +154,12 @@ def minhash_near_dupes(
     return est.filter(F.col("est_jaccard") >= threshold)
 
 
-def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
+SIMHASH_BITS = 64
+
+
+def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """SimHash fingerprint per document from term-frequency-weighted word
-    hashes; returns (id, simhash bigint).
+    hashes; returns (id, simhash bigint) with SIMHASH_BITS bits.
 
     Each word occurrence hashes once (xxhash64) and contributes ±1 per
     bit; summing per occurrence IS the tf weighting, so no intermediate
@@ -174,11 +176,11 @@ def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str, bits: int = 
                 F.lit(-1)
             )
         ).alias(f"b{i}")
-        for i in range(bits)
+        for i in range(SIMHASH_BITS)
     ]
     agg = hashed.groupBy(id_col).agg(*bit_sums)
     fp = F.expr(
-        " + ".join(f"IF(b{i} > 0, shiftleft(1L, {i}), 0L)" for i in range(bits))
+        " + ".join(f"IF(b{i} > 0, shiftleft(1L, {i}), 0L)" for i in range(SIMHASH_BITS))
     )
     return agg.select(F.col(id_col), fp.alias("simhash"))
 

@@ -55,13 +55,16 @@ def _driver_min_labels(sym: DataFrame) -> DataFrame:
     return sym.sparkSession.createDataFrame(out, schema="a long, label long")
 
 
+# round cap of the distributed min-label loop
+CC_MAX_ITER = 50
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str,
     src_col: str,
     dst_col: str,
-    max_iter: int = 50,
     driver_edge_cap: int = 500_000,
 ) -> DataFrame:
     """(id, component) for every node; component = min node id reachable.
@@ -151,7 +154,7 @@ def connected_components(
         .repartition(n_parts, "a")
         .localCheckpoint(eager=False)
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nbr = sym_p.join(labels, "a").select(
             F.col("b").alias("a"), "label", F.lit(None).cast("long").alias("old")
         )

@@ -8,7 +8,7 @@ rerank.py:169-197) on Spark:
   score_raw    symmetric chamfer (mean-of-max cosine both ways). Shared
                recordings dominate it — an album and its re-release score
                near 1.
-  score_style  the same chamfer with member pairs at/above `dup_thresh`
+  score_style  the same chamfer with member pairs at/above DUP_THRESH
                (pooled cosine ≥0.9985, the measured duplicate band) masked
                out of BOTH maxes; a member whose every counterpart is a
                duplicate contributes 0, which demotes pure re-releases.
@@ -21,7 +21,7 @@ rerank.py:169-197) on Spark:
                would over-smooth.
 
 Spark shapes: member sets gather per group with the reference's uniform
-linspace subsample above `pad` (deterministic, keyed on an explicit member
+linspace subsample above PAD (deterministic, keyed on an explicit member
 order column); pairs form on the tiny per-group rows; all three scores
 compute in one Arrow batch per pair — a single matmul feeds all three.
 γ calibration is a one-scalar aggregate (median over a deterministic,
@@ -38,6 +38,18 @@ from pyspark.sql import Window as W
 
 from tlmc_etl_spark.operators.vectors import chunk_matrix
 from tlmc_etl_spark.tuning import fanout
+
+# The operators' fixed configuration: one value per setting, the one
+# every caller uses.
+# pooled-cosine duplicate band masked out of the style score
+DUP_THRESH = 0.9985
+# members kept per group (uniform linspace subsample above it)
+PAD = 64
+# hash-ordered pair sample the γ median runs over
+GAMMA_SAMPLE_PAIRS = 1024
+# chunk-IDF: background sample cap, sigmoid strength
+IDF_BACKGROUND_CAP = 100_000
+IDF_STRENGTH = 1.0
 
 
 # ---------------------------------------------------------------- numpy core
@@ -74,9 +86,7 @@ def three_scores_numpy(
     return float(raw), float(style), float(kde)
 
 
-def estimate_chunk_weights_numpy(
-    query: np.ndarray, background: np.ndarray, strength: float = 1.0
-) -> np.ndarray:
+def estimate_chunk_weights_numpy(query: np.ndarray, background: np.ndarray) -> np.ndarray:
     """Chunk-IDF: down-weight generic query chunks (rerank.py:169-197).
 
     A chunk's mean cosine against a random background sample estimates how
@@ -93,28 +103,25 @@ def estimate_chunk_weights_numpy(
     if spread < 1e-6:
         return np.ones(Q.shape[0])
     z = (generic - generic.mean()) / spread
-    return 1.0 / (1.0 + np.exp(strength * z))
+    return 1.0 / (1.0 + np.exp(IDF_STRENGTH * z))
 
 
 # ------------------------------------------------------------- spark plans
 
 
 def gather_group_members(
-    members: DataFrame,
-    group_col: str,
-    vec_col: str,
-    order_col: str,
-    pad: int = 64,
+    members: DataFrame, group_col: str, vec_col: str, order_col: str
 ) -> DataFrame:
     """(group, member matrix) with the reference's uniform subsample
-    policy above `pad` (build_groups, precompute_similar_groups.py:120-146):
-    members order by `order_col`, groups larger than pad keep the rows at
-    round(linspace(0, n-1, pad)) — deterministic, layout-independent.
+    policy above PAD (build_groups, precompute_similar_groups.py:120-146):
+    members order by `order_col`, groups larger than PAD keep the rows at
+    round(linspace(0, n-1, PAD)) — deterministic, layout-independent.
 
     The pick-set membership test runs JVM-side (a pad-length array per
     row, built only for over-cap groups), so the gathered matrix is
-    bounded at pad rows per group no matter the group size.
+    bounded at PAD rows per group no matter the group size.
     """
+    pad = PAD
     w = W.partitionBy(group_col).orderBy(order_col)
     cnt_w = W.partitionBy(group_col)
     picks = F.transform(
@@ -143,31 +150,28 @@ def gather_group_members(
     )
 
 
-def calibrate_pair_gamma(
-    pairs: DataFrame, sample_pairs: int = 1024, require_exhaustive: bool = False
-) -> float:
+def calibrate_pair_gamma(pairs: DataFrame) -> float:
     """Median-heuristic γ = 1 / median cross-pair member cosine distance
     (calibrate_gamma, precompute_similar_groups.py:156-178), measured over
     the pairs the kernel has to discriminate. The pair sample is a
     deterministic hash-ordered take; the median is an exact distributed
     aggregate; only the single scalar reaches the driver.
 
-    `require_exhaustive=True` asserts the population fits inside the
-    sample (pairs.count() <= sample_pairs). An oracle that replays γ as
-    the median over ALL pairs is only pinned to this operator while the
-    non-portable xxhash64 sample order never actually selects — the
-    guard turns that silent divergence (label cardinality outgrowing the
-    sample) into a loud error at the operator."""
-    if require_exhaustive:
-        n_pairs = pairs.count()
-        if n_pairs > sample_pairs:
-            raise ValueError(
-                f"calibrate_pair_gamma: {n_pairs} pairs exceed the "
-                f"{sample_pairs}-pair sample — the exhaustive-median oracle "
-                "contract no longer holds (the xxhash64 sample order would "
-                "now select, which DuckDB cannot replay)"
-            )
-    sampled = pairs.orderBy(F.xxhash64("group_a", "group_b")).limit(sample_pairs)
+    The population must fit inside the sample (pairs.count() <=
+    GAMMA_SAMPLE_PAIRS). The oracle replays γ as the median over ALL
+    pairs, so it is only pinned to this operator while the non-portable
+    xxhash64 sample order never actually selects — the guard turns that
+    silent divergence (label cardinality outgrowing the sample) into a
+    loud error at the operator."""
+    n_pairs = pairs.count()
+    if n_pairs > GAMMA_SAMPLE_PAIRS:
+        raise ValueError(
+            f"calibrate_pair_gamma: {n_pairs} pairs exceed the "
+            f"{GAMMA_SAMPLE_PAIRS}-pair sample — the exhaustive-median oracle "
+            "contract no longer holds (the xxhash64 sample order would "
+            "now select, which DuckDB cannot replay)"
+        )
+    sampled = pairs.orderBy(F.xxhash64("group_a", "group_b")).limit(GAMMA_SAMPLE_PAIRS)
 
     def dists(batches):
         # zip over columns, not iterrows (per-row Series construction cost)
@@ -188,14 +192,7 @@ def calibrate_pair_gamma(
 
 
 def three_score_group_similarity(
-    members: DataFrame,
-    group_col: str,
-    vec_col: str,
-    order_col: str,
-    dup_thresh: float = 0.9985,
-    gamma: float | None = None,
-    pad: int = 64,
-    gamma_sample_exhaustive: bool = False,
+    members: DataFrame, group_col: str, vec_col: str, order_col: str
 ) -> DataFrame:
     """All-pairs (a<b) three-score similarity between member-vector groups.
 
@@ -203,7 +200,7 @@ def three_score_group_similarity(
     kde_gamma). Symmetric by construction (every formula is); raw and kde
     self-scores are exactly 1 (verified by the differential suite, the
     reference's own exit-on-violation invariants,
-    precompute_similar_groups.py:238-256). If `gamma` is None it is
+    precompute_similar_groups.py:238-256). The kernel bandwidth γ is
     calibrated from the scored pairs via the median heuristic.
     """
     # persist the gathered matrices: both join sides read this table, and
@@ -218,7 +215,7 @@ def three_score_group_similarity(
     # the session owns the blocks. bench.py's clearCache() between
     # queries releases them; long-lived sessions rely on LRU eviction,
     # or call spark.catalog.clearCache() at pipeline boundaries.
-    gathered = gather_group_members(members, group_col, vec_col, order_col, pad).persist()
+    gathered = gather_group_members(members, group_col, vec_col, order_col).persist()
     a = gathered.select(F.col("group").alias("group_a"), F.col("vecs").alias("vecs_a"))
     b = gathered.select(F.col("group").alias("group_b"), F.col("vecs").alias("vecs_b"))
     # persist, not checkpoint: pairs feeds gamma calibration AND the
@@ -228,17 +225,13 @@ def three_score_group_similarity(
     # layout keeps full width for the Python scorer that consumes it.
     pairs = fanout(a.join(b, F.col("group_a") < F.col("group_b"))).persist()
 
-    if gamma is None:
-        gamma = calibrate_pair_gamma(
-            pairs, require_exhaustive=gamma_sample_exhaustive
-        )
-    g = float(gamma)
+    g = float(calibrate_pair_gamma(pairs))
 
     def score(batches):
         # zip over columns, not iterrows (per-row Series construction cost)
         for pdf in batches:
             out = [
-                (ga, gb, *three_scores_numpy(chunk_matrix(va), chunk_matrix(vb), dup_thresh, g))
+                (ga, gb, *three_scores_numpy(chunk_matrix(va), chunk_matrix(vb), DUP_THRESH, g))
                 for ga, gb, va, vb in zip(
                     pdf["group_a"], pdf["group_b"], pdf["vecs_a"], pdf["vecs_b"]
                 )
@@ -272,14 +265,11 @@ def chunk_idf_weights(
     id_col: str,
     group_col: str,
     vec_col: str,
-    background_cap: int = 100_000,
-    strength: float = 1.0,
-    seed: int = 42,
 ) -> DataFrame:
     """Per-chunk IDF-style weight in (0, 1] (rerank.py:169-197).
 
     Background = a bounded deterministic sample of corpus chunk vectors
-    (hash-ordered take, ≤`background_cap` rows — the reference says "100k
+    (hash-ordered take, ≤IDF_BACKGROUND_CAP rows — the reference says "100k
     rows is plenty"). Generic-ness is the mean cosine vs the background,
     and mean-of-dots EQUALS the dot with the background's MEAN unit
     vector (the identity the SQL oracle replays) — so the sample
@@ -308,7 +298,7 @@ def chunk_idf_weights(
     sample = (
         chunks.select(vec_col)
         .orderBy(F.xxhash64(F.col(vec_col)))
-        .limit(background_cap)
+        .limit(IDF_BACKGROUND_CAP)
     )
     bg_mean_rows = (
         # the sorted limit lands on ONE partition — without re-spreading,
@@ -347,7 +337,7 @@ def chunk_idf_weights(
     sd = F.stddev_pop("generic").over(gw)
     z = (F.col("generic") - mu) / sd
     weight = F.when(sd < 1e-6, F.lit(1.0)).otherwise(
-        F.lit(1.0) / (F.lit(1.0) + F.exp(F.lit(strength) * z))
+        F.lit(1.0) / (F.lit(1.0) + F.exp(F.lit(IDF_STRENGTH) * z))
     )
     return scored.select(
         F.col(id_col).alias("id"),

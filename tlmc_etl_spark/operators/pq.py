@@ -32,15 +32,39 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from tlmc_etl_spark.operators.vectors import (
+    SEED,
+    hash_medoid_centroids,
+    kmeans_centroids,
+    training_sample,
+)
 from tlmc_etl_spark.tuning import fanout
 
+# The operators' fixed configuration: one value per setting, the one
+# every caller uses.
+SUBSPACE_ITERS = 10
+# neighbors per anchor; IVF cells and cells probed per anchor
+K_NEIGHBORS = 10
+IVF_N_CENTROIDS = 16
+IVF_N_PROBE = 4
+# k-means PQ: subspaces, codewords per subspace, ADC anchors (id < n)
+PQ_M = 8
+PQ_N_CODES = 16
+ADC_N_ANCHORS = 20
+# hash-medoid (SQL-replayable) PQ: subspaces, codewords, anchors of the
+# ADC and IVF+PQ forms
+PORTABLE_M = 4
+PORTABLE_N_CODES = 8
+PORTABLE_ADC_N_ANCHORS = 20
+PORTABLE_IVF_N_ANCHORS = 200
 
-def _subspace_kmeans(X: np.ndarray, k: int, seed: int, iters: int = 10) -> np.ndarray:
+
+def _subspace_kmeans(X: np.ndarray, k: int, seed: int) -> np.ndarray:
     """Plain L2 k-means for one subspace (numpy, deterministic seed)."""
     rng = np.random.default_rng(seed)
     k = min(k, len(X))
     C = X[rng.choice(len(X), size=k, replace=False)].copy()
-    for _ in range(iters):
+    for _ in range(SUBSPACE_ITERS):
         # ||x-c||^2 = |x|^2 - 2 x.c + |c|^2 ; |x|^2 constant per row
         d = (C * C).sum(axis=1)[None, :] - 2.0 * (X @ C.T)
         assign = np.argmin(d, axis=1)
@@ -51,16 +75,9 @@ def _subspace_kmeans(X: np.ndarray, k: int, seed: int, iters: int = 10) -> np.nd
     return C
 
 
-def opq_rotation(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int = 8,
-    seed: int = 42,
-    train_cap: int = 100_000,
-) -> np.ndarray:
+def opq_rotation(emb: DataFrame, id_col: str, vec_col: str) -> np.ndarray:
     """Deterministic OPQ-style (d × d) orthogonal rotation: PCA basis with
-    eigencomponents dealt round-robin across the m subspaces.
+    eigencomponents dealt round-robin across the PQ_M subspaces.
 
     The reference's OPQ64 learns a rotation that balances information
     across PQ subspaces so no codebook is starved (faiss's OPQ
@@ -74,14 +91,8 @@ def opq_rotation(
     tests/test_pq.py; rotating by ANY orthogonal matrix preserves
     cosines, so downstream semantics are unchanged by construction.
     """
-    rows = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(train_cap)
-        .collect()
-    )
-    M = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    M = M / np.linalg.norm(M, axis=1, keepdims=True)
+    m = PQ_M
+    M = training_sample(emb, id_col, vec_col)
     d = M.shape[1]
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -124,38 +135,29 @@ def rotate_vectors(emb: DataFrame, id_col: str, vec_col: str, R: np.ndarray) -> 
     )
 
 
-def pq_train_codebooks(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int = 8,
-    k: int = 16,
-    seed: int = 42,
-    train_cap: int = 100_000,
-) -> np.ndarray:
-    """(m, k, d/m) codebook tensor from a deterministic bounded sample.
-
-    Vectors are unit-normalized before training (the corpus is scored by
-    cosine, so codebooks should tile the unit sphere's subspace
-    projections, not raw magnitudes). Sample = take-ordered by
-    xxhash64(id) capped at `train_cap`, the same layout-independent
-    bound ivf_topk trains under.
-    """
-    rows = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(train_cap)
-        .collect()
-    )
-    M = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    M = M / np.linalg.norm(M, axis=1, keepdims=True)
+def _kmeans_codebooks(M: np.ndarray) -> np.ndarray:
+    """(PQ_M, PQ_N_CODES, d/PQ_M) tensor: one seeded L2 k-means per
+    subspace of M."""
+    m, k = PQ_M, PQ_N_CODES
     d = M.shape[1]
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
     ds = d // m
     return np.stack(
-        [_subspace_kmeans(M[:, i * ds : (i + 1) * ds], k, seed + i) for i in range(m)]
+        [_subspace_kmeans(M[:, i * ds : (i + 1) * ds], k, SEED + i) for i in range(m)]
     )
+
+
+def pq_train_codebooks(emb: DataFrame, id_col: str, vec_col: str) -> np.ndarray:
+    """(PQ_M, PQ_N_CODES, d/PQ_M) codebook tensor from a deterministic
+    bounded sample.
+
+    Vectors are unit-normalized before training (the corpus is scored by
+    cosine, so codebooks should tile the unit sphere's subspace
+    projections, not raw magnitudes). Sample = vectors.training_sample,
+    the same layout-independent bound ivf_topk trains under.
+    """
+    return _kmeans_codebooks(training_sample(emb, id_col, vec_col))
 
 
 def pq_encode(
@@ -218,17 +220,7 @@ def pq_reconstruction(
     )
 
 
-def ivf_pq_topk(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k_neighbors: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    m: int = 8,
-    n_codes: int = 16,
-    seed: int = 42,
-) -> DataFrame:
+def ivf_pq_topk(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """The reference's full index shape — IVF coarse quantizer + PQ codes +
     ADC scoring (OPQ64,IVF16384,PQ64x8 minus the learned rotation,
     faiss_index_builder.py:10-23) — as one composed Spark plan.
@@ -245,29 +237,12 @@ def ivf_pq_topk(
     (PQ-lossy), candidate sets are approximate (IVF); both stages'
     quality floors are gated differentially in tests/test_pq.py.
     """
-    from tlmc_etl_spark.operators.vectors import kmeans_centroids
-
     spark = emb.sparkSession
     # coarse quantizer + codebooks train on the same bounded sample
-    rows = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(100_000)
-        .collect()
-    )
-    M = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-    coarse = kmeans_centroids(Mn, n_centroids, seed=seed)
-    d = Mn.shape[1]
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    ds = d // m
-    codebooks = np.stack(
-        [
-            _subspace_kmeans(Mn[:, i * ds : (i + 1) * ds], n_codes, seed + i)
-            for i in range(m)
-        ]
-    )
+    Mn = training_sample(emb, id_col, vec_col)
+    coarse = kmeans_centroids(Mn, IVF_N_CENTROIDS)
+    codebooks = _kmeans_codebooks(Mn)
+    ds = codebooks.shape[2]
     bc = spark.sparkContext.broadcast((coarse, codebooks))
 
     def cell_and_code(batches):
@@ -281,7 +256,7 @@ def ivf_pq_topk(
                 Xs = Vn[:, s * ds : (s + 1) * ds]
                 d2 = (cb[s] * cb[s]).sum(axis=1)[None, :] - 2.0 * (Xs @ cb[s].T)
                 codes[:, s] = np.argmin(d2, axis=1)
-            probes = np.argsort(-sims, axis=1)[:, :n_probe]
+            probes = np.argsort(-sims, axis=1)[:, :IVF_N_PROBE]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
@@ -301,7 +276,7 @@ def ivf_pq_topk(
         ),
     ).localCheckpoint(eager=True)
 
-    return _ivf_pq_serve(indexed, codebooks, id_col, vec_col, k_neighbors)
+    return _ivf_pq_serve(indexed, codebooks, id_col, vec_col)
 
 
 def _ivf_pq_serve(
@@ -309,7 +284,6 @@ def _ivf_pq_serve(
     codebooks: np.ndarray,
     id_col: str,
     vec_col: str,
-    k_neighbors: int,
     anchor_cap: int | None = None,
 ) -> DataFrame:
     """Shared IVF+PQ serving tail over an indexed table (id, vec, cell,
@@ -360,16 +334,17 @@ def _ivf_pq_serve(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_neighbors)
+        .filter(F.col("rank") <= K_NEIGHBORS)
         .select("anchor", "neighbor", "adc_score", "rank")
     )
 
 
-def _subspace_codebooks(S: np.ndarray, m: int, n_codes: int) -> np.ndarray:
-    """(m, n_codes, d/m) codebook tensor = the first `n_codes` unit seed
-    vectors sliced per subspace — the oracle-pinned portable codebook
-    recipe, shared by every *_portable PQ operator so the rule the SQL
-    twins replay lives in exactly one place."""
+def _subspace_codebooks(S: np.ndarray) -> np.ndarray:
+    """(PORTABLE_M, PORTABLE_N_CODES, d/PORTABLE_M) codebook tensor = the
+    first PORTABLE_N_CODES unit seed vectors sliced per subspace — the
+    oracle-pinned portable codebook recipe, shared by every *_portable PQ
+    operator so the rule the SQL twins replay lives in exactly one place."""
+    m, n_codes = PORTABLE_M, PORTABLE_N_CODES
     d = S.shape[1]
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -391,33 +366,23 @@ def _encode_rounded(Vn: np.ndarray, cb: np.ndarray) -> np.ndarray:
     return codes
 
 
-def ivf_pq_topk_portable(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k_neighbors: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    m: int = 4,
-    n_codes: int = 8,
-    n_anchors: int = 200,
-) -> DataFrame:
+def ivf_pq_topk_portable(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """The full IVF+PQ index shape with BOTH quantizers deterministic
-    and SQL-replayable: coarse centroids are the `n_centroids`
+    and SQL-replayable: coarse centroids are the IVF_N_CENTROIDS
     hash-medoid unit vectors (portable md5 order), PQ codewords the
-    first `n_codes` of the same seed list sliced per subspace, and
+    first PORTABLE_N_CODES of the same seed list sliced per subspace, and
     every ranking (cell assignment, code assignment) works on
     round(·, 6) values with index tie-breaks — so DuckDB replays
     quantize -> encode -> probe -> ADC -> rank end-to-end. Same plan
     shape as ivf_pq_topk (candidate side ships only m-byte codes, the
     memory contract that serves a 100 TB corpus); only the quantizer
-    training differs. Anchors are bounded (`id < n_anchors`) to keep
-    the oracle replay's pair count driver-friendly."""
-    from tlmc_etl_spark.operators.vectors import hash_medoid_centroids
-
-    S = hash_medoid_centroids(emb, id_col, vec_col, max(n_centroids, n_codes))
-    coarse = S[:n_centroids]
-    codebooks = _subspace_codebooks(S, m, n_codes)
+    training differs. Anchors are bounded (id < PORTABLE_IVF_N_ANCHORS)
+    to keep the oracle replay's pair count driver-friendly."""
+    S = hash_medoid_centroids(
+        emb, id_col, vec_col, max(IVF_N_CENTROIDS, PORTABLE_N_CODES)
+    )
+    coarse = S[:IVF_N_CENTROIDS]
+    codebooks = _subspace_codebooks(S)
     spark = emb.sparkSession
     bc = spark.sparkContext.broadcast((coarse, codebooks))
 
@@ -436,7 +401,7 @@ def ivf_pq_topk_portable(
                     id_col: pdf[id_col],
                     vec_col: pdf[vec_col],
                     "cell": order[:, 0],
-                    "probe_cells": [p.tolist() for p in order[:, :n_probe]],
+                    "probe_cells": [p.tolist() for p in order[:, :IVF_N_PROBE]],
                     "codes": [c.tolist() for c in codes],
                 }
             )
@@ -451,7 +416,7 @@ def ivf_pq_topk_portable(
     ).localCheckpoint(eager=True)
 
     return _ivf_pq_serve(
-        indexed, codebooks, id_col, vec_col, k_neighbors, anchor_cap=n_anchors
+        indexed, codebooks, id_col, vec_col, anchor_cap=PORTABLE_IVF_N_ANCHORS
     )
 
 
@@ -461,7 +426,6 @@ def _adc_serve(
     codebooks: np.ndarray,
     id_col: str,
     vec_col: str,
-    k_neighbors: int,
     n_anchors: int,
 ) -> DataFrame:
     """Shared ADC serving plan: anchors keep full precision, their
@@ -507,33 +471,24 @@ def _adc_serve(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_neighbors)
+        .filter(F.col("rank") <= K_NEIGHBORS)
         .select("anchor", "neighbor", "adc_score", "rank")
     )
 
 
-def pq_adc_topk_portable(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k_neighbors: int = 10,
-    m: int = 4,
-    n_codes: int = 8,
-    n_anchors: int = 20,
-) -> DataFrame:
+def pq_adc_topk_portable(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """ADC top-k with a DETERMINISTIC, SQL-replayable codebook: the
-    codewords of subspace s are the s-th sub-vectors of the `n_codes`
-    unit-normalized corpus vectors with smallest portable md5 hash of
-    their id (hash-sampled medoids, zero k-means iterations), indexed
+    codewords of subspace s are the s-th sub-vectors of the
+    PORTABLE_N_CODES unit-normalized corpus vectors with smallest
+    portable md5 hash of their id (hash-sampled medoids, zero k-means
+    iterations), indexed
     in hash order. Encoding ranks round(|c|^2 - 2 x·c, 6) ascending
     with index tie-break, so DuckDB replays codebook -> encode -> ADC
     lookup -> rank exactly — the xengine pattern applied to PQ. Same
     serving arithmetic as pq_adc_topk (m table reads per pair,
     candidates never decoded); only codebook training differs."""
-    from tlmc_etl_spark.operators.vectors import hash_medoid_centroids
-
-    S = hash_medoid_centroids(emb, id_col, vec_col, n_codes)
-    codebooks = _subspace_codebooks(S, m, n_codes)
+    S = hash_medoid_centroids(emb, id_col, vec_col, PORTABLE_N_CODES)
+    codebooks = _subspace_codebooks(S)
     bc = emb.sparkSession.sparkContext.broadcast(codebooks)
 
     def encode(batches):
@@ -550,16 +505,10 @@ def pq_adc_topk_portable(
         encode, schema=f"{id_col} long, codes array<int>"
     )
 
-    return _adc_serve(emb, codes, codebooks, id_col, vec_col, k_neighbors, n_anchors)
+    return _adc_serve(emb, codes, codebooks, id_col, vec_col, PORTABLE_ADC_N_ANCHORS)
 
 
-def pq_recon_portable(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int = 4,
-    n_codes: int = 8,
-) -> DataFrame:
+def pq_recon_portable(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(id, recon_cosine) lossiness audit with the DETERMINISTIC,
     SQL-replayable codebook of pq_adc_topk_portable: hash-medoid
     codewords (portable md5 order, zero k-means iterations),
@@ -567,15 +516,13 @@ def pq_recon_portable(
     of per-subspace dots over the decode norm — the exact association
     order the DuckDB twin replays — rounded once at the end. Production
     k-means form: pq_reconstruction."""
-    from tlmc_etl_spark.operators.vectors import hash_medoid_centroids
-
-    S = hash_medoid_centroids(emb, id_col, vec_col, n_codes)
-    codebooks = _subspace_codebooks(S, m, n_codes)
+    S = hash_medoid_centroids(emb, id_col, vec_col, PORTABLE_N_CODES)
+    codebooks = _subspace_codebooks(S)
     bc = emb.sparkSession.sparkContext.broadcast(codebooks)
 
     def recon(batches):
         cb = bc.value
-        _, _, ds = cb.shape
+        m, _, ds = cb.shape
         for pdf in batches:
             V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             V = V / np.linalg.norm(V, axis=1, keepdims=True)
@@ -595,18 +542,10 @@ def pq_recon_portable(
     )
 
 
-def pq_adc_topk(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k_neighbors: int = 10,
-    m: int = 8,
-    n_codes: int = 16,
-    n_anchors: int = 20,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate cosine top-k by ADC: anchors (id < n_anchors) keep full
-    precision, every candidate is scored from its m-byte code.
+def pq_adc_topk(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Approximate cosine top-K_NEIGHBORS by ADC: anchors
+    (id < ADC_N_ANCHORS) keep full precision, every candidate is scored
+    from its PQ_M-byte code.
 
     Per anchor the codebook collapses to an (m × k) lookup table of
     subspace dot products; a candidate's score is m table reads — the
@@ -614,6 +553,6 @@ def pq_adc_topk(
     the codes table (anchors' tables broadcast); ranking is one window.
     Output: (anchor, neighbor, adc_score, rank).
     """
-    codebooks = pq_train_codebooks(emb, id_col, vec_col, m=m, k=n_codes, seed=seed)
+    codebooks = pq_train_codebooks(emb, id_col, vec_col)
     codes = pq_encode(emb, id_col, vec_col, codebooks)
-    return _adc_serve(emb, codes, codebooks, id_col, vec_col, k_neighbors, n_anchors)
+    return _adc_serve(emb, codes, codebooks, id_col, vec_col, ADC_N_ANCHORS)

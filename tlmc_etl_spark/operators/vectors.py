@@ -18,6 +18,30 @@ from pyspark.sql import functions as F
 
 from tlmc_etl_spark.tuning import fanout
 
+# The operators' fixed configuration: one value per setting, the one
+# every caller uses.
+SEED = 42
+# neighbors per anchor, and the portable IVF's cells / cells probed
+ANN_K = 10
+IVF_N_CENTROIDS = 16
+IVF_N_PROBE = 4
+# k-means quantizer: Lloyd iterations, training sample cap
+KMEANS_ITERS = 8
+TRAIN_CAP = 100_000
+# candidate pairs kept per group by the centroid recall stage
+CENTROID_TOPK = 16
+# sign-LSH top-k key width
+LSH_TOPK_PLANES = 4
+# auto-sized sign-LSH: expected bucket occupancy, worst-pair recall
+LSH_TARGET_BUCKET = 8
+LSH_RECALL_TARGET = 0.95
+# cluster-scoped dedup: cosine threshold, expected cell occupancy
+SEMDEDUP_THRESHOLD = 0.9
+SEMDEDUP_TARGET_CELL = 128
+# per-group cosine top-k tile bounds (anchor rows × candidate rows)
+A_TILE = 2048
+B_TILE = 16384
+
 
 def chunk_matrix(cells) -> np.ndarray:
     """Stack an Arrow list-of-vectors cell into a float64 row matrix.
@@ -51,18 +75,17 @@ def _side_mean(best: np.ndarray, w: np.ndarray | None) -> float:
     return (best * w).sum() / w.sum()
 
 
-def centroid_topk_pairs(
-    emb: DataFrame, group_col: str, vec_col: str, k: int = 16
-) -> DataFrame:
+def centroid_topk_pairs(emb: DataFrame, group_col: str, vec_col: str) -> DataFrame:
     """Recall stage for group-level scoring: candidate (group_a < group_b)
-    pairs whose CENTROID cosine ranks top-k from either side.
+    pairs whose CENTROID cosine ranks top-CENTROID_TOPK from either side.
 
     This is the pruning contract the expensive pair scorers require at
     scale (precompute_similar_groups.py:195-235 reranks candidates, never
     all pairs): centroids collapse each group to one row, the pair cosine
     is an equi-join on vector position over that tiny rollup, and each
-    group keeps its k best neighbors — so downstream pair work is
-    n_groups·k, not n_groups². No gathered matrices, no cross join.
+    group keeps its CENTROID_TOPK best neighbors — so downstream pair
+    work is n_groups·k, not n_groups². No gathered matrices, no cross
+    join.
     """
     expanded = emb.select(
         F.col(group_col).alias("g"), F.posexplode(vec_col).alias("pos", "x")
@@ -84,7 +107,9 @@ def centroid_topk_pairs(
         )
     )
     w = W.partitionBy("ga").orderBy(F.col("c").desc(), F.col("gb").asc())
-    kept = cos.withColumn("__rk", F.row_number().over(w)).filter(F.col("__rk") <= k)
+    kept = cos.withColumn("__rk", F.row_number().over(w)).filter(
+        F.col("__rk") <= CENTROID_TOPK
+    )
     return (
         kept.select(
             F.least("ga", "gb").alias("group_a"), F.greatest("ga", "gb").alias("group_b")
@@ -94,7 +119,7 @@ def centroid_topk_pairs(
 
 
 def chamfer_group_scores(
-    emb: DataFrame, group_col: str, vec_col: str, candidates: DataFrame | None = None
+    emb: DataFrame, group_col: str, vec_col: str, candidates: DataFrame
 ) -> DataFrame:
     """Symmetric chamfer between groups of vectors, over a candidate pair
     list.
@@ -103,20 +128,15 @@ def chamfer_group_scores(
     collect_list — acceptable because each group's chunk set is bounded
     (the reference caps/pads at 96 chunks per track,
     precompute_similar_tracks.py:84-92; the cap is the scale contract).
-    `candidates` (group_a, group_b) selects which pairs are scored — pass
-    a recall stage's output (centroid_topk_pairs) so pair work is
+    `candidates` (group_a, group_b) selects which pairs are scored — a
+    recall stage's output (centroid_topk_pairs), so pair work is
     n_groups·k; the matrices attach by two equi-joins, never a cross
-    join. candidates=None falls back to all a<b pairs — the exhaustive
-    small-sf differential-oracle form ONLY (a nested-loop over groups at
-    scale).
+    join.
     """
     gathered = emb.groupBy(group_col).agg(F.collect_list(vec_col).alias("vecs"))
     a = gathered.select(F.col(group_col).alias("group_a"), F.col("vecs").alias("vecs_a"))
     b = gathered.select(F.col(group_col).alias("group_b"), F.col("vecs").alias("vecs_b"))
-    if candidates is None:
-        pairs = a.join(b, F.col("group_a") < F.col("group_b"))
-    else:
-        pairs = candidates.join(a, "group_a").join(b, "group_b")
+    pairs = candidates.join(a, "group_a").join(b, "group_b")
 
     def score(batches):
         # zip over columns, not iterrows: iterrows materializes a Series
@@ -137,10 +157,10 @@ def chamfer_group_scores(
     )
 
 
-def make_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
+def make_hyperplanes(dim: int, n_planes: int) -> np.ndarray:
     """Deterministic random hyperplanes for sign-LSH (seeded, so every
     executor and every run derives identical buckets)."""
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(SEED)
     return rng.standard_normal((n_planes, dim))
 
 
@@ -184,38 +204,28 @@ def lsh_bucket_ids(emb: DataFrame, vec_col: str, planes: np.ndarray) -> DataFram
 LSH_TOPK_CORPUS_CEILING = 4096
 
 
-def lsh_topk(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n: int,
-    k: int = 10,
-    n_planes: int = 4,
-    seed: int = 42,
-    multi_probe: bool = True,
-    corpus_ceiling: int = LSH_TOPK_CORPUS_CEILING,
-) -> DataFrame:
-    """Approximate cosine top-k over the `n`-row corpus `emb` (the caller
+def lsh_topk(emb: DataFrame, id_col: str, vec_col: str, n: int) -> DataFrame:
+    """Approximate cosine top-ANN_K over the `n`-row corpus `emb` (the caller
     supplies the size, e.g. a parquet footer count; the operator never
     counts): candidates restricted to the same LSH
     bucket (plus one-bit-flip probe buckets), then exact cosine + a
     per-anchor window rank.
 
     The bucket equi-join replaces the |n|² cross join with Σ bucket²;
-    multi-probe explodes each anchor into 1+n_planes probe keys — a union
-    of equi-joins, never a cross join, so cost stays Σ bucket² × (1+p).
+    multi-probe explodes each anchor into 1+LSH_TOPK_PLANES probe keys —
+    a union of equi-joins, never a cross join, so cost stays
+    Σ bucket² × (1+p).
     Recall against exact brute force is property-tested
     (tests/test_ext_operators.py); only the candidate set is approximate —
     scores of returned pairs are exact cosine.
 
-    Above `corpus_ceiling` rows the fixed-plane form is the wrong tool
-    (see LSH_TOPK_CORPUS_CEILING) and the call routes to ivf_topk with an
+    Above LSH_TOPK_CORPUS_CEILING rows the fixed-plane form is the wrong
+    tool (see there) and the call routes to ivf_topk with an
     occupancy-sized quantizer (cells ≈ n/256, so candidate work stays
     ~n·probe·256) — same output contract (anchor, neighbor, score, rank;
     exact cosine scores, approximate candidate set), IVF recall gates in
     tests/test_pq.py and the takeover-regime gate in
-    tests/test_ext_operators.py. Pass corpus_ceiling=None to force the
-    LSH form.
+    tests/test_ext_operators.py.
 
     ORACLE REGIME NOTE: the declared output is an approximate candidate
     set. The SQL replay oracle (plans/ext.py `_lsh_ann_oracle`) encodes
@@ -225,28 +235,25 @@ def lsh_topk(
     all sit below the ceiling, so the SQL check pins the regime it
     replays.
     """
-    if corpus_ceiling is not None and n > corpus_ceiling:
+    if n > LSH_TOPK_CORPUS_CEILING:
         n_centroids = min(max(16, n // 256), SEMDEDUP_CENTROID_CEILING)
-        return ivf_topk(
-            emb, id_col, vec_col, k=k,
-            n_centroids=n_centroids, n_probe=4, seed=seed,
-        )
-    planes = make_hyperplanes(_dim_of(emb, vec_col), n_planes, seed)
+        return ivf_topk(emb, id_col, vec_col, k=ANN_K, n_centroids=n_centroids, n_probe=4)
+    planes = make_hyperplanes(_dim_of(emb, vec_col), LSH_TOPK_PLANES)
     bucketed = _with_unit_norm(
         lsh_bucket_ids(emb.select(id_col, vec_col), vec_col, planes), vec_col
     )
-    a = bucketed.select(F.col(id_col).alias("anchor"), F.col(vec_col).alias("va"), F.col("nrm").alias("na"), "bucket")
-    if multi_probe:
-        flips = F.array(*([F.col("bucket")] + [
-            F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)
-        ]))
-        a = a.select("anchor", "va", "na", F.explode(flips).alias("bucket"))
+    flips = F.array(*([F.col("bucket")] + [
+        F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(LSH_TOPK_PLANES)
+    ]))
+    a = bucketed.select(
+        F.col(id_col).alias("anchor"), F.col(vec_col).alias("va"), F.col("nrm").alias("na"), "bucket"
+    ).select("anchor", "va", "na", F.explode(flips).alias("bucket"))
     b = bucketed.select(F.col(id_col).alias("neighbor"), F.col(vec_col).alias("vb"), F.col("nrm").alias("nb"), "bucket")
     # No pair dedup needed: each neighbor lives in exactly ONE bucket and
     # the probe keys per anchor are distinct values, so a pair can match at
     # most once. Scoring is a cogrouped per-bucket matmul — each vector
     # crosses the Arrow boundary once per side, never once per pair.
-    return _grouped_cosine_topk(a, b, "bucket", k)
+    return _grouped_cosine_topk(a, b, "bucket", ANN_K)
 
 
 def table_catch_probability(n_planes: int, cos_threshold: float) -> float:
@@ -262,12 +269,10 @@ def table_catch_probability(n_planes: int, cos_threshold: float) -> float:
     return p**n_planes + n_planes * (1.0 - p) * p ** (n_planes - 1)
 
 
-def auto_n_tables(
-    n_planes: int, cos_threshold: float, recall_target: float = 0.95
-) -> int:
+def auto_n_tables(n_planes: int, cos_threshold: float) -> int:
     """OR-amplification depth L holding worst-pair recall at
-    `recall_target` for a given key width: miss = (1 - P_table)^L <=
-    1 - recall_target. Auto-sized key widths grow with log2(n) to keep
+    LSH_RECALL_TARGET for a given key width: miss = (1 - P_table)^L <=
+    1 - LSH_RECALL_TARGET. Auto-sized key widths grow with log2(n) to keep
     bucket occupancy constant, which decays P_table — so L must grow
     with the corpus too (the classic n^rho LSH cost), else recall decays
     silently (~40% worst-pair at n~1e9 under a pinned L=6)."""
@@ -278,23 +283,20 @@ def auto_n_tables(
         return 1
     if P <= 1e-12:
         raise ValueError(
-            f"sign-LSH cannot hold recall {recall_target} at "
+            f"sign-LSH cannot hold recall {LSH_RECALL_TARGET} at "
             f"{n_planes} planes / cos {cos_threshold}: per-table catch "
-            "probability is ~0 — raise target_bucket or the threshold"
+            "probability is ~0 — raise LSH_TARGET_BUCKET or the threshold"
         )
-    return max(1, _math.ceil(_math.log(1.0 - recall_target) / _math.log(1.0 - P)))
+    return max(1, _math.ceil(_math.log(1.0 - LSH_RECALL_TARGET) / _math.log(1.0 - P)))
 
 
 def lsh_near_dup(
     emb: DataFrame,
     id_col: str,
     vec_col: str,
-    threshold: float = 0.35,
-    n_planes: int | None = 4,
-    n_tables: int | None = 6,
-    seed: int = 42,
-    target_bucket: int = 8,
-    recall_target: float = 0.95,
+    threshold: float,
+    n_planes: int | None,
+    n_tables: int | None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs at scale: multi-table sign-LSH
     candidate generation → exact cosine scoring → threshold filter.
@@ -331,14 +333,14 @@ def lsh_near_dup(
     candidate fraction tiny while OR-amplification holds recall.
 
     `n_planes=None` auto-sizes the key width to the corpus:
-    ceil(log2(n / target_bucket)) planes keeps EXPECTED bucket occupancy
-    ≈ target_bucket regardless of n, so in-bucket candidate pairs — the
+    ceil(log2(n / LSH_TARGET_BUCKET)) planes keeps EXPECTED bucket
+    occupancy ≈ LSH_TARGET_BUCKET regardless of n, so in-bucket candidate pairs — the
     join's cost — stay ~linear in corpus size instead of quadratic
     (fixed planes ⇒ buckets fill ∝ n ⇒ pairs ∝ n²; the round-5 sf1 run
     measured 16× wall for 4× rows at pinned 8 planes).
 
     `n_tables=None` then auto-sizes the OR-amplification depth to HOLD
-    `recall_target` for the worst promised pair (cosine == threshold) at
+    LSH_RECALL_TARGET for the worst promised pair (cosine == threshold) at
     that key width: each extra plane costs one bit of per-table recall,
     so a PINNED table count decays with the corpus (L=6 holds ≥98.7%
     worst-pair recall at 11 planes but only ~40% at the 27 planes a
@@ -352,10 +354,10 @@ def lsh_near_dup(
         import math as _math
 
         n = emb.count()
-        n_planes = max(8, _math.ceil(_math.log2(max(n, 1) / target_bucket)))
+        n_planes = max(8, _math.ceil(_math.log2(max(n, 1) / LSH_TARGET_BUCKET)))
     if n_tables is None:
-        n_tables = auto_n_tables(n_planes, threshold, recall_target)
-    all_planes = make_hyperplanes(dim, n_planes * n_tables, seed)
+        n_tables = auto_n_tables(n_planes, threshold)
+    all_planes = make_hyperplanes(dim, n_planes * n_tables)
 
     def keys_of(batches):
         for pdf in batches:
@@ -522,24 +524,17 @@ def _ivf_serve(
     return _grouped_cosine_topk(anchors, cands, "cell", k)
 
 
-def ivf_topk_portable(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
-    """IVF top-k with a DETERMINISTIC coarse quantizer DuckDB can
-    replay: centroids are the `n_centroids` corpus vectors with the
+def ivf_topk_portable(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """IVF top-ANN_K with a DETERMINISTIC coarse quantizer DuckDB can
+    replay: centroids are the IVF_N_CENTROIDS corpus vectors with the
     smallest portable 60-bit hash of their id (hash-sampled medoids —
     zero k-means iterations), unit-normalized, indexed in hash order.
     Cell assignment ranks round(cosine, 6) with centroid-index
     tie-break, so every step is value-checkable by SQL replay — the
     xengine pattern applied to the quantizer. Serving is _ivf_serve,
     the same plan ivf_topk runs; only quantizer training differs."""
-    C = hash_medoid_centroids(emb, id_col, vec_col, n_centroids)
-    return _ivf_serve(emb, id_col, vec_col, k, C, n_probe, round_assign=True)
+    C = hash_medoid_centroids(emb, id_col, vec_col, IVF_N_CENTROIDS)
+    return _ivf_serve(emb, id_col, vec_col, ANN_K, C, IVF_N_PROBE, round_assign=True)
 
 
 def _dim_of(emb: DataFrame, vec_col: str) -> int:
@@ -588,10 +583,7 @@ def _topk_with_ties(scores: np.ndarray, ids: np.ndarray, k: int):
     return masked[rix, order], ids[rix, order]
 
 
-def _grouped_cosine_topk(
-    anchors: DataFrame, cands: DataFrame, key: str, k: int,
-    a_tile: int = 2048, b_tile: int = 16384,
-) -> DataFrame:
+def _grouped_cosine_topk(anchors: DataFrame, cands: DataFrame, key: str, k: int) -> DataFrame:
     """Per-group exact-cosine top-k via ONE cogrouped Arrow matmul per
     group (LSH bucket / IVF cell), replacing the per-pair row explosion.
 
@@ -608,7 +600,7 @@ def _grouped_cosine_topk(
 
     Scores round to 6dp BEFORE the partial cut, matching the ranking
     contract of every SQL-replayed ANN oracle. Tiles bound the sims
-    matrix at a_tile×b_tile doubles regardless of group skew.
+    matrix at A_TILE×B_TILE doubles regardless of group skew.
 
     anchors: (anchor, va, na, `key`) — one row per anchor×probe;
     cands:   (neighbor, vb, nb, `key`) — one row per vector."""
@@ -626,13 +618,13 @@ def _grouped_cosine_topk(
         B = np.asarray(bdf["vb"].tolist(), dtype=np.float64)
         nb = bdf["nb"].to_numpy(dtype=np.float64)
         out_a, out_n, out_s = [], [], []
-        for i0 in range(0, len(A), a_tile):
-            At, at_ids = A[i0:i0 + a_tile], aid[i0:i0 + a_tile]
-            nat = na[i0:i0 + a_tile]
+        for i0 in range(0, len(A), A_TILE):
+            At, at_ids = A[i0:i0 + A_TILE], aid[i0:i0 + A_TILE]
+            nat = na[i0:i0 + A_TILE]
             run_s = run_i = None
-            for j0 in range(0, len(B), b_tile):
-                Bt, bt_ids = B[j0:j0 + b_tile], bid[j0:j0 + b_tile]
-                nbt = nb[j0:j0 + b_tile]
+            for j0 in range(0, len(B), B_TILE):
+                Bt, bt_ids = B[j0:j0 + B_TILE], bid[j0:j0 + B_TILE]
+                nbt = nb[j0:j0 + B_TILE]
                 # raw dot / norm-product, the exact formula every SQL
                 # oracle replays (division AFTER the dot, not row
                 # pre-normalization — keeps 6dp boundary behavior)
@@ -695,20 +687,13 @@ def hash_medoid_centroids(
     return C / np.linalg.norm(C, axis=1, keepdims=True)
 
 
-def semantic_dedup_portable(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_centroids: int | None = None,
-    threshold: float = 0.9,
-    target_cell: int = 128,
-) -> DataFrame:
+def semantic_dedup_portable(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """SemDeDup-style cluster-scoped dedup with a DETERMINISTIC,
     SQL-replayable quantizer: coarse centroids are hash-medoids
     (portable md5 order, zero k-means iterations), each vector joins its
     argmax-cosine cell (round(·,6) with index tie-break), and within a
     cell a vector is dropped when an EARLIER-id member's rounded cosine
-    reaches the threshold — dup_of is the smallest such id, NULL for
+    reaches SEMDEDUP_THRESHOLD — dup_of is the smallest such id, NULL for
     kept rows.
 
     Plan shape: assignment is one broadcast matmul per Arrow batch; the
@@ -718,9 +703,9 @@ def semantic_dedup_portable(
     uses the ROUNDED cosine so both engines decide from the same 6dp
     value (the xengine convention).
 
-    `n_centroids=None` auto-sizes to ceil(n / target_cell) (floor 16,
-    ceiling SEMDEDUP_CENTROID_CEILING): EXPECTED cell occupancy stays
-    ~target_cell as the corpus grows, so the in-cell pair join — the
+    The centroid count auto-sizes to ceil(n / SEMDEDUP_TARGET_CELL)
+    (floor 16, ceiling SEMDEDUP_CENTROID_CEILING): EXPECTED cell
+    occupancy stays ~SEMDEDUP_TARGET_CELL as the corpus grows, so the in-cell pair join — the
     operator's cost — stays ~linear in n instead of quadratic (the same
     scale rule the LSH key width follows; a pinned centroid count means
     cells fill ∝ n and pairs ∝ n²). The ABSOLUTE ceiling bounds the
@@ -734,13 +719,12 @@ def semantic_dedup_portable(
     semantics change. The sizing rule is itself SQL-replayable (a count,
     a ceil, a least/greatest), so the oracle stays pinned to the
     operator at every sf."""
-    if n_centroids is None:
-        import math as _math
+    import math as _math
 
-        n_centroids = min(
-            SEMDEDUP_CENTROID_CEILING,
-            max(16, _math.ceil(emb.count() / target_cell)),
-        )
+    n_centroids = min(
+        SEMDEDUP_CENTROID_CEILING,
+        max(16, _math.ceil(emb.count() / SEMDEDUP_TARGET_CELL)),
+    )
     C = hash_medoid_centroids(emb, id_col, vec_col, n_centroids)
     bc = emb.sparkSession.sparkContext.broadcast(C)
 
@@ -787,7 +771,7 @@ def semantic_dedup_portable(
             cos = np.round(
                 (A * B).sum(axis=1) / (pdf["na"].to_numpy() * pdf["nb"].to_numpy()), 6
             )
-            keep = cos >= threshold
+            keep = cos >= SEMDEDUP_THRESHOLD
             yield pd.DataFrame(
                 {
                     "__ida": pdf["__ida"].to_numpy()[keep],
@@ -810,17 +794,31 @@ def semantic_dedup_portable(
     )
 
 
-def kmeans_centroids(
-    M: np.ndarray, n_centroids: int, n_iter: int = 8, seed: int = 42
-) -> np.ndarray:
+def training_sample(emb: DataFrame, id_col: str, vec_col: str) -> np.ndarray:
+    """Unit-normalized quantizer training rows: take-ordered by
+    xxhash64(id) (a deterministic, layout-independent pseudo-shuffle) and
+    capped at TRAIN_CAP — a distributed take-ordered, so the driver never
+    holds more than the cap no matter the corpus size. Every k-means
+    quantizer (IVF cells, PQ codebooks, the OPQ rotation) trains on it."""
+    rows = (
+        emb.select(id_col, vec_col)
+        .orderBy(F.xxhash64(F.col(id_col)))
+        .limit(TRAIN_CAP)
+        .collect()
+    )
+    M = np.array([r[vec_col] for r in rows], dtype=np.float64)
+    return M / np.linalg.norm(M, axis=1, keepdims=True)
+
+
+def kmeans_centroids(M: np.ndarray, n_centroids: int) -> np.ndarray:
     """Plain k-means on a (driver-side) sample — deterministic seed, used
     to build the IVF coarse quantizer. At 100 TB the sample is a
     `df.sample(fraction).collect()` of ~100k vectors; the clustering cost
     is independent of corpus size."""
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(SEED)
     idx = rng.choice(len(M), size=min(n_centroids, len(M)), replace=False)
     C = M[np.sort(idx)].copy()
-    for _ in range(n_iter):
+    for _ in range(KMEANS_ITERS):
         assign = np.argmax(M @ C.T, axis=1)  # cosine assignment (unit-norm'd below)
         for c in range(len(C)):
             members = M[assign == c]
@@ -836,11 +834,9 @@ def ivf_topk(
     emb: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    train_cap: int = 100_000,
+    k: int,
+    n_centroids: int,
+    n_probe: int,
 ) -> DataFrame:
     """IVF approximate cosine top-k: coarse k-means quantizer, candidates
     restricted to the anchor's n_probe nearest cells.
@@ -851,19 +847,9 @@ def ivf_topk(
     equi-join on cell id — Σ cell² × probe work instead of |n|². Scores on
     candidates are exact cosine; only the candidate set is approximate.
 
-    The quantizer trains on a bounded driver-side sample: rows ordered by
-    xxhash64(id) (a deterministic, layout-independent pseudo-shuffle) and
-    truncated to `train_cap` — a distributed take-ordered, so the driver
-    never materializes more than the cap no matter the corpus size.
-    Clustering cost is independent of corpus size; only centroids broadcast.
+    The quantizer trains on the bounded driver-side training_sample, so
+    clustering cost is independent of corpus size; only centroids
+    broadcast.
     """
-    rows = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(train_cap)
-        .collect()
-    )
-    M = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-    C = kmeans_centroids(Mn, n_centroids, seed=seed)
+    C = kmeans_centroids(training_sample(emb, id_col, vec_col), n_centroids)
     return _ivf_serve(emb, id_col, vec_col, k, C, n_probe, round_assign=False)

@@ -41,9 +41,7 @@ from tlmc_etl_spark.sinks.shards import (
     write_similar_track_shards,
 )
 
-# recall candidates per track, neighbors kept per track, CSV shards
-K_RECALL = 15
-K_FINAL = 5
+# CSV shards of the similar-track table
 N_SHARDS = 8
 
 
@@ -91,10 +89,7 @@ def lifecycle_pre_sink(
         F.pmod(F.col("track"), F.lit(n_rel)) == F.col("release_idx"),
         "left_semi",
     )
-    ranked = two_stage_similar_tracks(
-        gated, "track", "vec", k_recall=K_RECALL, k_final=K_FINAL,
-        chunk_order_col="vec_id",
-    )
+    ranked = two_stage_similar_tracks(gated)
     return rel, ranked, n_rel
 
 

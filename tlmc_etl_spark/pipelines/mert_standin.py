@@ -39,6 +39,18 @@ BATCH_SIZE = 64
 N_MELS = 16
 
 
+def chunk_starts(n_samples: int, window: int, hop: int) -> range:
+    """Start sample of every window of the 6 s / 4 s chunk grid over
+    `n_samples` (window and hop in samples at the stream's rate): starts
+    advance by `hop` while a full window fits, plus one final partial
+    window when the last full one stops short of the end — a truncated
+    tail would silently drop up to window - hop samples of every track.
+    An empty stream still gets one (all-padding) window."""
+    base = max(n_samples - window, 0) // hop + 1
+    n = base + (1 if (base - 1) * hop + window < n_samples else 0)
+    return range(0, n * hop, hop)
+
+
 def synth_tone_wav(freq: float, seconds: float, sr: int = SAMPLE_RATE) -> bytes:
     """Deterministic 16-bit mono sine WAV — the in-container stand-in
     for real audio payloads (tests, demo queries, fixtures)."""
@@ -160,23 +172,12 @@ def parse_wav(payload: bytes) -> tuple[np.ndarray, int]:
     return x, sr
 
 
-def chunk_samples(
-    x: np.ndarray,
-    sr: int,
-    chunk_s: float = CHUNK_SECONDS,
-    hop_s: float = HOP_SECONDS,
-) -> np.ndarray:
-    """(n_chunks, chunk_len) matrix of overlapping windows; the final
+def chunk_samples(x: np.ndarray, sr: int) -> np.ndarray:
+    """(n_chunks, chunk_len) matrix of the chunk_starts windows; the final
     partial window is zero-padded to full length (the reference's
-    processor pads batches — a truncated tail chunk would silently drop
-    up to chunk_s - hop_s seconds of every track)."""
-    chunk_len = int(round(chunk_s * sr))
-    hop = int(round(hop_s * sr))
-    if len(x) == 0:
-        return np.zeros((1, chunk_len))
-    starts = list(range(0, max(len(x) - chunk_len, 0) + 1, hop))
-    if starts[-1] + chunk_len < len(x):
-        starts.append(starts[-1] + hop)
+    processor pads batches)."""
+    chunk_len = int(round(CHUNK_SECONDS * sr))
+    starts = chunk_starts(len(x), chunk_len, int(round(HOP_SECONDS * sr)))
     out = np.zeros((len(starts), chunk_len))
     for i, s in enumerate(starts):
         seg = x[s : s + chunk_len]

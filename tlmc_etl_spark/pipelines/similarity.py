@@ -23,6 +23,9 @@ Spark shapes:
    weights are optional data on the same path: gather_chunks(weight_col=)
    adds an aligned `chunk_weights` column, and chamfer_rerank weights
    both sides whenever that column is present (rerank.py:60-90).
+
+The configuration is fixed: every chunk table is (track, vec_id, vec),
+and the shape constants below are the one setting every caller uses.
 """
 
 from __future__ import annotations
@@ -36,12 +39,29 @@ from pyspark.sql import functions as F
 from tlmc_etl_spark.operators.vectors import chamfer_numpy, chunk_matrix
 from tlmc_etl_spark.tuning import fanout
 
+# recall candidates per track, neighbors kept per track, chunks per track
+K_RECALL = 15
+K_FINAL = 5
+CHUNK_CAP = 96
+# candidate rows per exact-recall broadcast tile
+TILE_ROWS = 200_000
+# Ceiling on driver tile collects the exact recall path may pay. Each
+# tile is one collect + one broadcast + one full-corpus matmul pass, so
+# exact cost grows as n_tiles × n — quadratic once tiles grow with the
+# corpus. Past the ceiling the IVF candidate path takes over (the
+# reference's own two-tier design: exact late-interaction only inside a
+# recalled candidate set, SIMILARITY-PLAN.md:63-79).
+EXACT_TILE_CEILING = 8
+# IVF recall arm: expected pooled rows per cell, cells probed per anchor
+IVF_TARGET_CELL = 4096
+IVF_N_PROBE = 8
 
-def pooled_unit_mean(chunks: DataFrame, track_col: str, vec_col: str) -> DataFrame:
+
+def pooled_unit_mean(chunks: DataFrame) -> DataFrame:
     """Per-track mean of chunk vectors, renormalized to unit length
     (utils/utils.py:114-129). Output: (track, pooled array<double>)."""
     expanded = chunks.select(
-        F.col(track_col).alias("track"), F.posexplode(vec_col).alias("pos", "x")
+        F.col("track").alias("track"), F.posexplode("vec").alias("pos", "x")
     ).select("track", "pos", F.col("x").cast("double").alias("x"))
     mean_vec = expanded.groupBy("track", "pos").agg(F.avg("x").alias("m"))
     gathered = (
@@ -57,23 +77,24 @@ def _normalized(col: str):
     return F.transform(F.col(col), lambda x: x / norm)
 
 
-def cosine_recall(pooled: DataFrame, k: int, n: int, tile_rows: int = 200_000) -> DataFrame:
-    """Exact cosine top-k over the pooled table of `n` rows (tiled
+def cosine_recall(pooled: DataFrame, n: int) -> DataFrame:
+    """Exact cosine top-K_RECALL over the pooled table of `n` rows (tiled
     matmul; pooled vectors are unit-norm so cosine = dot). Output
     (anchor, neighbor, recall_score).
 
     Scale shape: the CANDIDATE side is processed in hash tiles of at most
-    `tile_rows` rows — each tile is collected, broadcast, and scored
+    TILE_ROWS rows — each tile is collected, broadcast, and scored
     against the streaming anchor side for a per-tile top-k; a final
     per-anchor window merges the partials. The driver never holds more
-    than one tile, so memory is bounded by `tile_rows × dim`, not corpus
+    than one tile, so memory is bounded by TILE_ROWS × dim, not corpus
     size (the round-1 single-collect form broke at the reference's 640 MB
     pooled table). Tie-breaks are (rounded score desc, neighbor asc) both
     in-tile and in the merge window, so output is layout-independent.
     """
     import math
 
-    n_tiles = max(1, math.ceil(n / tile_rows))
+    k = K_RECALL
+    n_tiles = max(1, math.ceil(n / TILE_ROWS))
     spark = pooled.sparkSession
 
     partials = []
@@ -141,71 +162,50 @@ def cosine_recall(pooled: DataFrame, k: int, n: int, tile_rows: int = 200_000) -
     return merged
 
 
-# Ceiling on driver tile collects the exact recall path may pay. Each
-# tile is one collect + one broadcast + one full-corpus matmul pass, so
-# exact cost grows as n_tiles × n — quadratic once tiles grow with the
-# corpus. Past the ceiling the IVF candidate path takes over (the
-# reference's own two-tier design: exact late-interaction only inside a
-# recalled candidate set, SIMILARITY-PLAN.md:63-79).
-EXACT_TILE_CEILING = 8
-
-
-def choose_recall_strategy(
-    n: int, tile_rows: int = 200_000, exact_tile_ceiling: int = EXACT_TILE_CEILING
-) -> str:
-    """'exact' while the corpus fits in <= exact_tile_ceiling broadcast
+def choose_recall_strategy(n: int) -> str:
+    """'exact' while the corpus fits in <= EXACT_TILE_CEILING broadcast
     tiles, else 'ivf'. Pure so the takeover point is contract-testable
     at any n without materializing a corpus that size."""
     import math
 
     return (
         "exact"
-        if max(1, math.ceil(n / tile_rows)) <= exact_tile_ceiling
+        if max(1, math.ceil(n / TILE_ROWS)) <= EXACT_TILE_CEILING
         else "ivf"
     )
 
 
-def recall_candidates(
-    pooled: DataFrame,
-    k: int,
-    n: int,
-    tile_rows: int = 200_000,
-    exact_tile_ceiling: int = EXACT_TILE_CEILING,
-    target_cell: int = 4096,
-    n_probe: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Self-selecting recall stage over the pooled table of `n` rows:
-    exact tiled cosine while the corpus is small enough that every
+def recall_candidates(pooled: DataFrame, n: int) -> DataFrame:
+    """Self-selecting top-K_RECALL recall stage over the pooled table of
+    `n` rows: exact tiled cosine while the corpus is small enough that every
     candidate tile fits through a bounded number of driver collects; IVF
     candidate generation beyond. Both arms return a MATERIALIZED table
     (the exact arm's merged top-k checkpoint, the IVF arm's own), so the
     caller may release `pooled` as soon as this returns.
 
     The IVF arm auto-sizes the coarse quantizer to the corpus —
-    n_centroids = ceil(n / target_cell) keeps EXPECTED cell occupancy
-    ~target_cell regardless of n, so per-anchor candidate work is
-    n_probe × target_cell — bounded, not corpus-proportional. Recall
-    against the exact form is property-gated
+    n_centroids = ceil(n / IVF_TARGET_CELL) keeps EXPECTED cell
+    occupancy ~IVF_TARGET_CELL regardless of n, so per-anchor candidate
+    work is IVF_N_PROBE × IVF_TARGET_CELL — bounded, not
+    corpus-proportional. Recall against the exact form is property-gated
     (tests/test_similarity_pipeline.py); scores of emitted candidates
     are exact cosine in both arms, so the rerank stage sees identical
     semantics either way.
     """
     import math
 
-    if choose_recall_strategy(n, tile_rows, exact_tile_ceiling) == "exact":
-        return cosine_recall(pooled, k, n, tile_rows)
+    if choose_recall_strategy(n) == "exact":
+        return cosine_recall(pooled, n)
     from tlmc_etl_spark.operators.vectors import ivf_topk
 
-    n_centroids = max(16, math.ceil(n / target_cell))
+    n_centroids = max(16, math.ceil(n / IVF_TARGET_CELL))
     return ivf_topk(
         pooled,
         "track",
         "pooled",
-        k=k,
+        k=K_RECALL,
         n_centroids=n_centroids,
-        n_probe=min(n_probe, n_centroids),
-        seed=seed,
+        n_probe=min(IVF_N_PROBE, n_centroids),
     ).select(
         "anchor",
         "neighbor",
@@ -213,33 +213,25 @@ def recall_candidates(
     ).localCheckpoint(eager=True)
 
 
-def gather_chunks(
-    chunks: DataFrame,
-    track_col: str,
-    vec_col: str,
-    cap: int = 96,
-    order_col: str | None = None,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """(track, chunk matrix as array<array<double>>), capped at `cap`
-    chunks per track — the pad/subsample contract.
+def gather_chunks(chunks: DataFrame, weight_col: str | None = None) -> DataFrame:
+    """(track, chunk matrix as array<array<double>>) from a
+    (track, vec_id, vec) chunk table, capped at CHUNK_CAP chunks per
+    track — the pad/subsample contract.
 
-    Which chunks survive the cap is decided by `order_col` (an explicit,
-    stable per-chunk index — pass the source row id / chunk ordinal).
-    Without one, the fallback orders by xxhash64 of the vector content —
-    still layout-independent, unlike a monotonically_increasing_id, which
-    depends on partition layout and made rerank scores drift across
-    repartitions (the engine's determinism rule forbids that).
+    The chunks that survive the cap are the first CHUNK_CAP by `vec_id`,
+    the chunk table's explicit, stable per-chunk index: layout-independent,
+    unlike a monotonically_increasing_id, which depends on partition
+    layout and made rerank scores drift across repartitions (the
+    engine's determinism rule forbids that).
 
     With `weight_col` (the chunk-IDF weight, joined onto the chunks by
     the caller) the output also carries `chunk_weights`, aligned with
     `chunk_set`: vector and weight collect through one sorted struct, so
     weight i always belongs to chunk i."""
-    order = F.col(order_col) if order_col else F.xxhash64(F.col(vec_col))
-    w = W.partitionBy(track_col).orderBy(order)
+    w = W.partitionBy("track").orderBy(F.col("vec_id"))
     capped = (
         chunks.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= cap)
+        .filter(F.col("__rn") <= CHUNK_CAP)
     )
     # No cast to array<double> here: the chunk matrix is the similarity
     # pipeline's heaviest payload, and float->double widening is EXACT, so
@@ -248,11 +240,11 @@ def gather_chunks(
     # the Arrow transfer all ship HALF the bytes (the _with_unit_norm
     # idiom, operators/vectors.py). An already-double input stays double —
     # same values either way.
-    by_track = capped.groupBy(F.col(track_col).alias("track"))
+    by_track = capped.groupBy(F.col("track").alias("track"))
     if weight_col is None:
-        return by_track.agg(F.collect_list(F.col(vec_col)).alias("chunk_set"))
+        return by_track.agg(F.collect_list(F.col("vec")).alias("chunk_set"))
     ovw = F.struct(
-        F.col("__rn").alias("o"), F.col(vec_col).alias("v"), F.col(weight_col).alias("w")
+        F.col("__rn").alias("o"), F.col("vec").alias("v"), F.col(weight_col).alias("w")
     )
     return by_track.agg(F.array_sort(F.collect_list(ovw)).alias("ovw")).select(
         "track",
@@ -261,9 +253,9 @@ def gather_chunks(
     )
 
 
-def chamfer_rerank(recall: DataFrame, chunk_sets: DataFrame, k_final: int) -> DataFrame:
+def chamfer_rerank(recall: DataFrame, chunk_sets: DataFrame) -> DataFrame:
     """Score recall pairs with symmetric chamfer over chunk sets, keep the
-    per-anchor top k_final with dense 1-based ranks. When `chunk_sets`
+    per-anchor top K_FINAL with dense 1-based ranks. When `chunk_sets`
     carries `chunk_weights` (gather_chunks with a weight column), both
     sides are chunk-IDF weighted — the reference's full rerank form
     (rerank.py:60-90).
@@ -273,7 +265,7 @@ def chamfer_rerank(recall: DataFrame, chunk_sets: DataFrame, k_final: int) -> Da
     pair rows; the anchor-side matrix meets its pairs through a cogroup
     on `anchor`, so each anchor's cap×dim matrix crosses the shuffle and
     the Arrow boundary once per ANCHOR instead of once per pair — a
-    k_recall× cut of the anchor half of the payload. (The previous shape
+    K_RECALL× cut of the anchor half of the payload. (The previous shape
     joined BOTH matrices onto every pair and round-robined the doubled
     payload to the scorer; the plan showed pair rows carrying `ca` and
     `cb` through two joins plus the fanout exchange.) Per-pair arithmetic
@@ -291,7 +283,7 @@ def chamfer_rerank(recall: DataFrame, chunk_sets: DataFrame, k_final: int) -> Da
     # Only recall anchors get an anchor-side row: a cogroup key whose
     # pairs side is empty while the other side carries the nested chunk
     # matrix crashes the Python worker in the Arrow conversion, before
-    # score_group runs. Recall is n_anchors × k_recall rows, so a
+    # score_group runs. Recall is n_anchors × K_RECALL rows, so a
     # broadcast semi-join filters without adding an exchange. (An anchor
     # none of whose neighbors has a chunk set would still crash; recall
     # and chunk_sets built from the same chunks never produce one.)
@@ -337,34 +329,28 @@ def chamfer_rerank(recall: DataFrame, chunk_sets: DataFrame, k_final: int) -> Da
     w = W.partitionBy("anchor").orderBy(F.col("score").desc(), F.col("neighbor").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_final)
+        .filter(F.col("rank") <= K_FINAL)
         .select("anchor", "neighbor", "rank", "score")
     )
 
 
-def two_stage_similar_tracks(
-    chunks: DataFrame,
-    track_col: str,
-    vec_col: str,
-    k_recall: int = 20,
-    k_final: int = 5,
-    chunk_cap: int = 96,
-    chunk_order_col: str | None = None,
-) -> DataFrame:
-    """recall→rerank composition; output feeds
-    sinks/shards.write_similar_track_shards unchanged."""
+def two_stage_similar_tracks(chunks: DataFrame) -> DataFrame:
+    """recall→rerank composition over a (track, vec_id, vec) chunk table:
+    top-K_RECALL pooled recall, chamfer rerank over the first CHUNK_CAP
+    chunks by vec_id, top-K_FINAL (anchor, neighbor, rank, score) per
+    track. Output feeds sinks/shards.write_similar_track_shards
+    unchanged."""
     # The pooled table feeds the recall stage several times: each
     # candidate tile collect and the distributed anchor input. Persist it
     # (n_tracks rows — tiny at any corpus scale) so the explode+aggregate
     # pooling subtree runs once. The count below is that persisted
     # table's materialization, not a separate probe: it fills the cache,
     # and the recall stage reuses its result as the corpus size.
-    pooled = pooled_unit_mean(chunks, track_col, vec_col).persist()
+    pooled = pooled_unit_mean(chunks).persist()
     n = pooled.count()
     # Self-selecting: exact tiled cosine under the tile ceiling, IVF
     # candidates beyond it (recall floor property-gated). Either arm
     # returns a materialized table, so the cache can go.
-    recall = recall_candidates(pooled, k_recall, n)
+    recall = recall_candidates(pooled, n)
     pooled.unpersist()
-    sets = gather_chunks(chunks, track_col, vec_col, chunk_cap, order_col=chunk_order_col)
-    return chamfer_rerank(recall, sets, k_final)
+    return chamfer_rerank(recall, gather_chunks(chunks))

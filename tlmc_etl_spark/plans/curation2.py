@@ -79,7 +79,7 @@ def _lsh_near_dup_xengine_oracle(
     sf (0.01) — pinned by test_lsh_hi_oracle_knobs_match_autosize."""
     from tlmc_etl_spark.operators.vectors import make_hyperplanes
 
-    planes = make_hyperplanes(64, n_planes * n_tables, 42)
+    planes = make_hyperplanes(64, n_planes * n_tables)
     rows = ",\n    ".join(
         f"({r // n_planes}, {r % n_planes}, "
         f"[{', '.join(repr(float(x)) for x in planes[r])}])"
@@ -150,7 +150,7 @@ def embedding_near_dup_lsh_xengine(spark: SparkSession, sf_dir: str) -> DataFram
 # literals are exactly the knobs auto-sizing yields at the driver's oracle
 # sf (0.01): corpus = 500 vectors + 50 planted = 550 ->
 # n_planes = max(8, ceil(log2(550/8))) = 8 and
-# n_tables = auto_n_tables(8, threshold=0.9, recall_target=0.95) = 3.
+# n_tables = auto_n_tables(8, 0.9) = 3 (LSH_RECALL_TARGET 0.95).
 # Knob agreement between these literals and the operator's auto-sizing is
 # pinned by tests/test_ext_operators.py::test_lsh_hi_oracle_knobs_match_autosize
 # — at any other sf the operator re-sizes itself and the recall gate (not
@@ -318,7 +318,7 @@ def pq_recon_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tlmc_etl_spark.operators.pq import pq_recon_portable
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_recon_portable(emb, "vec_id", "embedding", m=4, n_codes=8).orderBy(
+    return pq_recon_portable(emb, "vec_id", "embedding").orderBy(
         "vec_id"
     )
 
@@ -396,9 +396,7 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tlmc_etl_spark.operators.vectors import semantic_dedup_portable
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return semantic_dedup_portable(
-        _plant_near_dups(emb), "vec_id", "embedding", threshold=0.9
-    ).orderBy("vec_id")
+    return semantic_dedup_portable(_plant_near_dups(emb), "vec_id", "embedding").orderBy("vec_id")
 
 
 # --------------------------------------------------------------------------
@@ -620,6 +618,6 @@ def opq_recon_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     rotated = rotate_vectors(emb, "vec_id", "embedding", opq_xengine_rotation())
-    return pq_recon_portable(rotated, "vec_id", "embedding", m=4, n_codes=8).orderBy(
+    return pq_recon_portable(rotated, "vec_id", "embedding").orderBy(
         "vec_id"
     )

@@ -113,7 +113,7 @@ def chamfer_group_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-gated in tests/test_plan_quality.py).
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    cands = centroid_topk_pairs(emb, "label", "embedding", k=16)
+    cands = centroid_topk_pairs(emb, "label", "embedding")
     return chamfer_group_scores(emb, "label", "embedding", candidates=cands).orderBy(
         "group_a", "group_b"
     )
@@ -213,12 +213,11 @@ def group_three_score_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
     )
     members = base.unionByName(planted)
+    # the oracle replays γ as the median over ALL pairs; the operator
+    # fails loudly (rather than silently diverging) if label cardinality
+    # ever makes the 1024-pair hash-ordered sample actually select
     return three_score_group_similarity(
-        members, "label", "embedding", order_col="vec_id", dup_thresh=0.9985,
-        # the oracle replays γ as the median over ALL pairs — loudly fail
-        # (rather than silently diverge) if label cardinality ever makes
-        # the 1024-pair hash-ordered sample actually select
-        gamma_sample_exhaustive=True,
+        members, "label", "embedding", order_col="vec_id"
     ).orderBy("group_a", "group_b")
 
 
@@ -270,13 +269,13 @@ def chunk_idf_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_ann_oracle() -> str:
     """SQL replay of lsh_ann_topk. The 4x64 hyperplane matrix is
-    seed-fixed and data-INDEPENDENT (make_hyperplanes(64, 4, 42)), so
+    seed-fixed and data-INDEPENDENT (make_hyperplanes(64, 4)), so
     its values embed as literals and DuckDB replays the entire
     bucket -> radius-1 probe -> exact-cosine -> top-k pipeline — the
     xengine pattern extended from hashes to the quantizer itself."""
     from tlmc_etl_spark.operators.vectors import make_hyperplanes
 
-    planes = make_hyperplanes(64, 4, 42)
+    planes = make_hyperplanes(64, 4)
     rows = ",\n    ".join(
         f"({i}, [{', '.join(repr(float(x)) for x in planes[i])}])"
         for i in range(planes.shape[0])
@@ -335,7 +334,7 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     comes from the parquet footer, so that regime decision runs no job."""
     emb = load_table(spark, sf_dir, "embeddings")
     n = table_row_count(f"{sf_dir}/embeddings.parquet")
-    return lsh_topk(emb, "vec_id", "embedding", n, k=10, n_planes=4).orderBy("anchor", "rank")
+    return lsh_topk(emb, "vec_id", "embedding", n).orderBy("anchor", "rank")
 
 
 @query("embedding_near_dup_lsh_lowthr")
@@ -354,9 +353,9 @@ def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tlmc_etl_spark.operators.vectors import lsh_near_dup
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_near_dup(emb, "vec_id", "embedding", threshold=0.35, n_planes=4).orderBy(
-        "keep_id", "dup_id"
-    )
+    return lsh_near_dup(
+        emb, "vec_id", "embedding", threshold=0.35, n_planes=4, n_tables=6
+    ).orderBy("keep_id", "dup_id")
 
 
 def _plant_near_dups(emb: DataFrame) -> DataFrame:
@@ -395,7 +394,7 @@ def embedding_near_dup_lsh_hi(spark: SparkSession, sf_dir: str) -> DataFrame:
     probing × OR-amplified tables holds worst-pair (cos=0.9) recall
     ≥95% (planted pairs at ≈0.98 are safer still). BOTH LSH knobs
     auto-size to the corpus: `n_planes=None` →
-    ceil(log2(n/target_bucket)) planes keeps expected bucket occupancy —
+    ceil(log2(n/LSH_TARGET_BUCKET)) planes keeps expected bucket occupancy —
     and with it the candidate join's cost per row — CONSTANT as the
     corpus grows (the pinned-8-plane form was measured quadratic, 16×
     wall for 4× rows, in the round-5 sf1 run), and `n_tables=None` →
@@ -846,9 +845,9 @@ def opq_pq_recon_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    R = opq_rotation(emb, "vec_id", "embedding", m=8)
+    R = opq_rotation(emb, "vec_id", "embedding")
     rotated = rotate_vectors(emb, "vec_id", "embedding", R)
-    cb = pq_train_codebooks(rotated, "vec_id", "embedding", m=8, k=16)
+    cb = pq_train_codebooks(rotated, "vec_id", "embedding")
     return pq_reconstruction(rotated, "vec_id", "embedding", cb).orderBy("vec_id")
 
 
@@ -864,7 +863,7 @@ def pq_reconstruction_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tlmc_etl_spark.operators.pq import pq_reconstruction, pq_train_codebooks
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = pq_train_codebooks(emb, "vec_id", "embedding", m=8, k=16)
+    cb = pq_train_codebooks(emb, "vec_id", "embedding")
     return pq_reconstruction(emb, "vec_id", "embedding", cb).orderBy("vec_id")
 
 
@@ -882,7 +881,7 @@ def pq_adc_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tlmc_etl_spark.operators.pq import pq_adc_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_adc_topk(emb, "vec_id", "embedding", k_neighbors=10, n_anchors=20).orderBy(
+    return pq_adc_topk(emb, "vec_id", "embedding").orderBy(
         "anchor", "rank"
     )
 
@@ -1032,11 +1031,7 @@ def ivf_pq_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tlmc_etl_spark.operators.pq import ivf_pq_topk_portable
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_pq_topk_portable(
-        emb, "vec_id", "embedding",
-        k_neighbors=10, n_centroids=16, n_probe=4, m=4, n_codes=8,
-        n_anchors=200,
-    ).orderBy("anchor", "rank")
+    return ivf_pq_topk_portable(emb, "vec_id", "embedding").orderBy("anchor", "rank")
 
 
 @query("pq_adc_topk", oracle=_PQ_ADC_XENGINE_ORACLE)
@@ -1053,9 +1048,7 @@ def pq_adc_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tlmc_etl_spark.operators.pq import pq_adc_topk_portable
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_adc_topk_portable(
-        emb, "vec_id", "embedding", k_neighbors=10, m=4, n_codes=8, n_anchors=20
-    ).orderBy("anchor", "rank")
+    return pq_adc_topk_portable(emb, "vec_id", "embedding").orderBy("anchor", "rank")
 
 
 @query("catalog_incremental_rebuild", oracle=_CATALOG_INCREMENTAL_ORACLE)
@@ -1124,7 +1117,7 @@ def ivf_pq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tlmc_etl_spark.operators.pq import ivf_pq_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_pq_topk(emb, "vec_id", "embedding", k_neighbors=10).orderBy("anchor", "rank")
+    return ivf_pq_topk(emb, "vec_id", "embedding").orderBy("anchor", "rank")
 
 
 @query("ivf_ann_topk_kmeans")
@@ -1202,9 +1195,7 @@ def ivf_ann_topk_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tlmc_etl_spark.operators.vectors import ivf_topk_portable
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk_portable(
-        emb, "vec_id", "embedding", k=10, n_centroids=16, n_probe=4
-    ).orderBy("anchor", "rank")
+    return ivf_topk_portable(emb, "vec_id", "embedding").orderBy("anchor", "rank")
 
 
 @query(
@@ -1286,9 +1277,7 @@ def two_stage_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = emb.select(
         (F.col("vec_id") % 50).alias("track"), "vec_id", F.col("embedding").alias("vec")
     )
-    return two_stage_similar_tracks(
-        chunks, "track", "vec", k_recall=15, k_final=5, chunk_order_col="vec_id"
-    ).orderBy("anchor", "rank")
+    return two_stage_similar_tracks(chunks).orderBy("anchor", "rank")
 
 
 @query(
@@ -1398,19 +1387,17 @@ def two_stage_weighted_similarity(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.col("vec_id") % 50).alias("track"), "vec_id", F.col("embedding").alias("vec")
     )
     weights = chunk_idf_weights(chunks, "vec_id", "track", "vec")
-    pooled = pooled_unit_mean(chunks, "track", "vec").persist()
-    # 50 tracks by construction (track = vec_id % 50); any n ≤ tile_rows
+    pooled = pooled_unit_mean(chunks).persist()
+    # 50 tracks by construction (track = vec_id % 50); any n ≤ TILE_ROWS
     # yields the same single tile.
-    recall = cosine_recall(pooled, 15, 50)
+    recall = cosine_recall(pooled, 50)
     pooled.unpersist()
     # weights join back by chunk id BEFORE the capped gather
     weighted_chunks = chunks.join(
         weights.select(F.col("id").alias("vec_id"), "weight"), "vec_id"
     )
-    wsets = gather_chunks(
-        weighted_chunks, "track", "vec", cap=96, order_col="vec_id", weight_col="weight"
-    )
-    return chamfer_rerank(recall, wsets, k_final=5).orderBy("anchor", "rank")
+    wsets = gather_chunks(weighted_chunks, weight_col="weight")
+    return chamfer_rerank(recall, wsets).orderBy("anchor", "rank")
 
 
 _TOKEN_SET_ORACLE = """

@@ -1278,6 +1278,7 @@ def mp3_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         mp3_reservoir_start,
         parse_mp3_frames,
     )
+    from tlmc_etl_spark.pipelines.mert_standin import chunk_starts
 
     ids = (
         load_table(spark, sf_dir, "embeddings")
@@ -1304,11 +1305,9 @@ def mp3_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 stream = make_mp3_stream(specs, id3v2_bytes=vid % 97)
                 frames = parse_mp3_frames(stream)
                 n_samples = sum(f["n_samples"] for f in frames)
-                base = max(n_samples - W, 0) // H + 1
-                n_chunks = base + (1 if (base - 1) * H + W < n_samples else 0)
-                for k in range(n_chunks):
-                    ff = (k * H) // SPF
-                    lf = -(-min(k * H + W, n_samples) // SPF) - 1
+                for k, start in enumerate(chunk_starts(n_samples, W, H)):
+                    ff = start // SPF
+                    lf = -(-min(start + W, n_samples) // SPF) - 1
                     ds = mp3_reservoir_start(frames, ff)
                     rows.append(
                         (
@@ -1573,6 +1572,7 @@ def wv_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_wvpk_stream,
         parse_wvpk_blocks,
     )
+    from tlmc_etl_spark.pipelines.mert_standin import chunk_starts
 
     ids = (
         load_table(spark, sf_dir, "embeddings")
@@ -1596,12 +1596,7 @@ def wv_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n_samples = blocks[0]["total_samples"]
                 assert n_samples == sum(b["block_samples"] for b in blocks)
                 window, hop = 264600, 176400  # 6 s / 4 s at 44.1 kHz
-                base = max(n_samples - window, 0) // hop + 1
-                n_chunks = base + (
-                    1 if (base - 1) * hop + window < n_samples else 0
-                )
-                for k in range(n_chunks):
-                    start = k * hop
+                for k, start in enumerate(chunk_starts(n_samples, window, hop)):
                     end = min(start + window, n_samples)
                     ff = start // bs
                     lf = (end + bs - 1) // bs - 1
@@ -1718,6 +1713,7 @@ def m4a_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_m4a,
         parse_m4a_sample_index,
     )
+    from tlmc_etl_spark.pipelines.mert_standin import chunk_starts
 
     ids = (
         load_table(spark, sf_dir, "embeddings")
@@ -1742,12 +1738,7 @@ def m4a_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 szs = idx["sample_sizes"]
                 n_samples = idx["n_samples"] * 1024
                 window, hop = 264600, 176400
-                base = max(n_samples - window, 0) // hop + 1
-                n_chunks = base + (
-                    1 if (base - 1) * hop + window < n_samples else 0
-                )
-                for k in range(n_chunks):
-                    start = k * hop
+                for k, start in enumerate(chunk_starts(n_samples, window, hop)):
                     end = min(start + window, n_samples)
                     ff = start // 1024
                     lf = (end + 1023) // 1024 - 1
@@ -3013,6 +3004,7 @@ def ogg_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_ogg_pages,
         parse_ogg_stream_info,
     )
+    from tlmc_etl_spark.pipelines.mert_standin import chunk_starts
 
     ids = (
         load_table(spark, sf_dir, "embeddings")
@@ -3048,11 +3040,8 @@ def ogg_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 assert ns == ends[-1]
                 gr = info["granule_rate"]
                 win, hop = 6 * gr, 4 * gr
-                base = max(ns - win, 0) // hop + 1
-                n_chunks = base + (1 if (base - 1) * hop + win < ns else 0)
                 dur = ns / gr
-                for k in range(n_chunks):
-                    start = k * hop
+                for k, start in enumerate(chunk_starts(ns, win, hop)):
                     end = min(start + win, ns)
                     fp = bisect.bisect_right(ends, start)
                     lp = bisect.bisect_left(ends, end)

@@ -799,7 +799,7 @@ def similarity_incremental_rebuild(spark: SparkSession, sf_dir: str) -> DataFram
     # ---- stored state stand-ins (production reads these from the gold
     # tables; checkpoints make the "previously materialized" boundary
     # explicit and keep the old-state subtree out of the delta plans)
-    old_pooled = pooled_unit_mean(old_chunks, "track", "vec").localCheckpoint(eager=True)
+    old_pooled = pooled_unit_mean(old_chunks).localCheckpoint(eager=True)
     rhs_all = old_pooled.select(
         F.col("track").alias("b_track"), F.col("pooled").alias("b_pooled")
     )
@@ -819,7 +819,7 @@ def similarity_incremental_rebuild(spark: SparkSession, sf_dir: str) -> DataFram
     # checkpointed because it feeds both the merged table and the rescore
     # side (|changed| rows — recompute ONCE is the whole point)
     new_changed_pooled = pooled_unit_mean(
-        chunks.join(F.broadcast(changed), "track", "left_semi"), "track", "vec"
+        chunks.join(F.broadcast(changed), "track", "left_semi")
     ).localCheckpoint(eager=True)
     merged_pooled = old_pooled.join(F.broadcast(changed), "track", "left_anti").unionByName(
         new_changed_pooled

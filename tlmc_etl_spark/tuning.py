@@ -24,7 +24,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 
 
-def fanout(df: DataFrame, *cols: str, parts: int | None = None) -> DataFrame:
+def fanout(df: DataFrame, *cols: str) -> DataFrame:
     """Repartition with an explicit (AQE-coalesce-exempt) partition count.
 
     Use directly before a CPU-bound Python stage whose shuffle input is
@@ -32,8 +32,8 @@ def fanout(df: DataFrame, *cols: str, parts: int | None = None) -> DataFrame:
     them (a following groupBy on the same keys adds no exchange); without,
     round-robins rows across tasks.
 
-    The default count is the session's `spark.sql.shuffle.partitions`,
-    NOT defaultParallelism: a keyed fanout often feeds one side of a
+    The count is the session's `spark.sql.shuffle.partitions`, NOT
+    defaultParallelism: a keyed fanout often feeds one side of a
     groupBy/cogroup whose other side hash-partitions at
     shuffle.partitions, and when the two counts differ EnsureRequirements
     inserts an extra aligning exchange (breaking the pinned-parallelism
@@ -41,7 +41,7 @@ def fanout(df: DataFrame, *cols: str, parts: int | None = None) -> DataFrame:
     session the two are the same number (session.py sizes both to
     $SPARK_GRAFT_CPUS), but the alignment must not depend on that.
     """
-    n = parts or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *cols) if cols else df.repartition(n)
 
 

@@ -30,34 +30,21 @@ FIXTURE = "fixtures/kmeans_sf0_01.json"
 
 
 def compute_artifacts(spark, sf_dir: str) -> dict:
-    import numpy as np
-    from pyspark.sql import functions as F
-
     from tlmc_etl_spark.operators.pq import (
         opq_rotation,
         pq_train_codebooks,
         rotate_vectors,
     )
-    from tlmc_etl_spark.operators.vectors import kmeans_centroids
+    from tlmc_etl_spark.operators.vectors import kmeans_centroids, training_sample
     from tlmc_etl_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     # the shared bounded training sample every kmeans form draws
-    # (orderBy(xxhash64(id)).limit(cap) — ivf_topk / ivf_pq_topk /
-    # pq_train_codebooks all use this exact recipe)
-    rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.xxhash64(F.col("vec_id")))
-        .limit(100_000)
-        .collect()
-    )
-    M = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-    coarse16 = kmeans_centroids(Mn, 16, seed=42)
-    cb_m8_k16 = pq_train_codebooks(emb, "vec_id", "embedding", m=8, k=16, seed=42)
-    R = opq_rotation(emb, "vec_id", "embedding", m=8)
+    coarse16 = kmeans_centroids(training_sample(emb, "vec_id", "embedding"), 16)
+    cb_m8_k16 = pq_train_codebooks(emb, "vec_id", "embedding")
+    R = opq_rotation(emb, "vec_id", "embedding")
     rotated = rotate_vectors(emb, "vec_id", "embedding", R)
-    opq_cb = pq_train_codebooks(rotated, "vec_id", "embedding", m=8, k=16, seed=42)
+    opq_cb = pq_train_codebooks(rotated, "vec_id", "embedding")
     return {
         "sf_dir": sf_dir,
         "coarse16": coarse16.tolist(),
