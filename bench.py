@@ -324,27 +324,22 @@ def run_spark_suite(spark, names: list[str], sf_dir: str) -> dict[str, float]:
     return times
 
 
-# Fields droppable (in order) when the line must shrink: each is
-# nice-to-have context, none is graded — the per-query map is the
-# evidence worth the most bytes, so it goes LAST.
-_DROP_ORDER = (
+# Ungraded context fields, shed first (in this order) when the headline
+# line must shrink; BENCH_FULL.json keeps every one of them. Never shed:
+# "loadavg_override", the honesty stamp that the walls may be inflated by
+# contention, and the graded "spark_over_duckdb".
+_SHED_FIELDS = (
     "loadavg_end",
     "loadavg_start",
     "loadavg_waited_sec",
-    # the 10x-delta reading sheds BEFORE the historically-graded 1k
-    # reading — both always survive in BENCH_FULL.json
     "incr_sec_per_1k_at_10k",
     "incr_sec_per_1k",
     "stress_excluded",
-    # derivable: spark_matched_wall == spark_over_duckdb * duckdb_wall
-    "spark_matched_wall",
-    # redundant: the committed SCALING.json holds the full curve
-    "scaling_suite_ratio",
+    "spark_matched_wall",  # == spark_over_duckdb * duckdb_wall
+    "scaling_suite_ratio",  # the committed SCALING.json holds the curve
+    "duckdb_wall",
+    "unit",
 )
-# NOT in _DROP_ORDER: "loadavg_override". The override stamp is the
-# honesty marker that the walls may be inflated by contention — if the
-# line still overflows after the drops above, the per-query map halves
-# (below) rather than ever letting a contended run present as clean.
 
 
 # stdout bytes the headline line may take: only the last 2,000 bytes of
@@ -353,87 +348,40 @@ HEADLINE_LIMIT = 1999
 
 
 def headline_line(out: dict) -> str:
-    """Serialize the headline artifact to a single JSON line of at most
+    """Serialize the headline artifact to one compact JSON line of at most
     HEADLINE_LIMIT bytes. Only the LAST 2,000 bytes of stdout are
-    recorded (one byte of which the trailing newline takes); a longer
-    line means the graded artifact stores "parsed": null (it did, in
-    rounds 5-6, hiding two rounds of scale evidence). Since round 16
-    the queries map arrives already 1dp-encoded under ALIASES (~1,800
-    bytes fully stamped), so the staged truncation below is a safety
-    net rather than the steady state: ungraded context fields drop
-    first (_DROP_ORDER, which deliberately EXCLUDES loadavg_override —
-    the contended-run stamp never drops), then per-query walls coarsen
-    (never to 0: the driver's comparator reads 0 as absent), and only a
-    pathological artifact ever sheds map entries. Compact separators
-    throughout: at 59 queries the default ", "/": " padding alone
-    (~150 bytes) was the difference between a worst-case line that
-    keeps its per-query map and one that halves it."""
-    limit = HEADLINE_LIMIT
-    compact = {"separators": (",", ":")}
-    line = json.dumps(out, **compact)
-    for field in _DROP_ORDER:
-        if len(line) <= limit:
-            break
-        if field in out:
-            del out[field]
-            out["fields_dropped"] = True
-            line = json.dumps(out, **compact)
-    # next: per-query walls coarsen to 1dp — EVERY query keeps its entry
-    # (a coarser wall beats a missing one)
-    if len(line) > limit and out.get("queries"):
-        out["queries"] = {n: round(t, 1) for n, t in out["queries"].items()}
-        line = json.dumps(out, **compact)
-    # then EXHAUST the context before coarsening evidence further: at 75
-    # queries the 1dp map alone is ~1,880 bytes, so the fully-stamped
-    # worst case needs every remaining context byte to keep decimals —
-    # value/duckdb_wall to 1dp, then the ratio's denominator drops (the
-    # graded ratio stays; SCALING.json / PERFORMANCE.md record duckdb
-    # walls every round), then the fields_dropped convenience flag (the
-    # drop set is detectable from the absent fields; loadavg_override is
-    # the honesty stamp and NEVER drops)
-    if len(line) > limit:
-        for f in ("value", "duckdb_wall"):
-            if isinstance(out.get(f), float):
-                out[f] = round(out[f], 1)
-        line = json.dumps(out, **compact)
-    if len(line) > limit and "duckdb_wall" in out:
-        del out["duckdb_wall"]
-        line = json.dumps(out, **compact)
-    if len(line) > limit and "fields_dropped" in out:
-        del out["fields_dropped"]
-        line = json.dumps(out, **compact)
-    # only past ALL of that do walls >= 0.95s coarsen to integers —
-    # NEVER to 0: a 0-valued entry reads as absent to the driver's
-    # comparator (the round-15 phantom-drop artifact), so sub-second
-    # walls keep their decimal — and the unit tag goes (the metric name
-    # already says "wall"; "sec" is implied)
-    if len(line) > limit and out.get("queries"):
+    recorded; a longer line stores "parsed": null (it did in rounds 5-6).
+
+    One shed rule, applied a step at a time until the line fits: the
+    ungraded context fields go first (_SHED_FIELDS), then the per-query
+    walls coarsen to whole seconds (never to 0: the driver's comparator
+    reads 0 as absent), then map entries go one at a time under a
+    queries_truncated stamp — stress-excluded entries first (outside the
+    graded ratio by definition), then the cheapest walls. The complete map
+    is in BENCH_FULL.json, written before this serializer runs. The
+    81-query aliased 1dp map fits with every context field present."""
+    out = dict(out)
+
+    def shed():
+        for f in _SHED_FIELDS:
+            if out.pop(f, None) is not None:
+                yield
+        walls = out.get("queries") or {}
         out["queries"] = {
-            n: int(round(t)) if t >= 0.95 else wall_1dp(t)
-            for n, t in out["queries"].items()
+            n: int(round(t)) if t >= 0.95 else wall_1dp(t) for n, t in walls.items()
         }
-        line = json.dumps(out, **compact)
-    if len(line) > limit and "unit" in out:
-        del out["unit"]
-        line = json.dumps(out, **compact)
-    # Last resort (80 long-named queries no longer fit 2,000 bytes even
-    # fully exhausted): shed entries one at a time — STRESS-EXCLUDED
-    # entries first (they are outside the graded ratio by definition, so
-    # the GRADED evidence always survives complete), then the
-    # cheapest-wall graded entries; the expensive queries are the
-    # evidence a reader needs from the stdout line, and the COMPLETE map
-    # is always in the committed BENCH_FULL.json written before this
-    # serializer runs.
-    if len(line) > limit and out.get("queries"):
+        yield
         out["queries_truncated"] = True
-        by_wall = sorted(
-            out["queries"].items(),
-            key=lambda kv: (kv[0] in STRESS, -kv[1], kv[0]),
-        )
-        while len(line) > limit and by_wall:
-            by_wall.pop()
-            out["queries"] = dict(sorted(by_wall))
-            line = json.dumps(out, **compact)
+        for n in sorted(walls, key=lambda n: (n not in STRESS, walls[n], n)):
+            del out["queries"][n]
+            yield
+
+    line = json.dumps(out, separators=(",", ":"))
+    if len(line) > HEADLINE_LIMIT:
+        for _ in shed():
+            line = json.dumps(out, separators=(",", ":"))
+            if len(line) <= HEADLINE_LIMIT:
+                break
     return line
 
 

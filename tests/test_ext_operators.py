@@ -12,7 +12,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tlmc_etl_spark.operators.dedup import simhash_near_dupes
+from tlmc_etl_spark.operators.dedup import MD5_60, XXHASH64, simhash_near_dupes
 from tlmc_etl_spark.operators.fuzzy import hungarian_match_join, similarity
 from tlmc_etl_spark.operators.vectors import chamfer_numpy
 from tlmc_etl_spark.plans import QUERIES
@@ -104,8 +104,15 @@ def test_simhash_identical_docs_collide(spark):
         ],
         "doc_id long, text string",
     )
-    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in simhash_near_dupes(df, "doc_id", "text", 64).collect()}
-    assert got[(1, 2)] == 0
+    # identical docs share all four chunks, so the pair joins four times:
+    # the first-matching-chunk filter must keep exactly one of those rows
+    for hashes in (XXHASH64, MD5_60):
+        rows = [
+            (r["id_a"], r["id_b"], r["hamming"])
+            for r in simhash_near_dupes(df, "doc_id", "text", 64, 64, hashes).collect()
+        ]
+        assert [r for r in rows if r[:2] == (1, 2)] == [(1, 2, 0)], (hashes, rows)
+        assert len({r[:2] for r in rows}) == len(rows), (hashes, rows)
 
 
 def test_hungarian_join_matches_perturbed_twins(spark):

@@ -1,5 +1,5 @@
-"""Options gate: the similarity and ANN operators run one fixed
-configuration. A setting that every production caller (code under
+"""Options gate: the similarity, ANN and near-duplicate operators run one
+fixed configuration. A setting that every production caller (code under
 plans/, pipelines/, sinks/, streaming/ and tools/, plus bench.py) leaves
 at one value is a module constant, not a parameter; a defaulted
 parameter survives only where two production callers pass different
@@ -25,6 +25,7 @@ MODULES = (
     "tlmc_etl_spark/pipelines/similarity.py",
     "tlmc_etl_spark/operators/vectors.py",
     "tlmc_etl_spark/operators/pq.py",
+    "tlmc_etl_spark/operators/dedup.py",
     "tlmc_etl_spark/operators/group_similarity.py",
     "tlmc_etl_spark/tuning.py",
 )
@@ -45,6 +46,18 @@ ALLOWED = {
     ("pq.py", "_ivf_pq_serve", "anchor_cap"): (
         "operators/pq.ivf_pq_topk serves every anchor (None); "
         "operators/pq.ivf_pq_topk_portable passes PORTABLE_IVF_N_ANCHORS"
+    ),
+    ("pq.py", "pq_encode", "round_d2"): (
+        "operators/pq.pq_adc_topk encodes on raw d2 (False); "
+        "operators/pq.pq_adc_topk_portable passes True"
+    ),
+    ("dedup.py", "minhash_near_dupes", "hashes"): (
+        "plans/ext.minhash_lsh_prodhash runs the production family (XXHASH64); "
+        "plans/ext.minhash_lsh_dedup passes MD5_60"
+    ),
+    ("dedup.py", "simhash_near_dupes", "hashes"): (
+        "plans/ext.simhash_prodhash runs the production family (XXHASH64); "
+        "plans/ext.simhash_dedup passes MD5_60"
     ),
 }
 

@@ -123,6 +123,22 @@ SHUFFLE_BUDGET = {
     "pq_reconstruction_audit": 0,  # encode+decode is one map stage, codebooks broadcast
     "zorder_curve_assign": 0,  # unrolled shift/mask sum, pure map
     "opq_pq_recon_audit": 0,  # rotate map + encode/decode map, codebooks broadcast
+    # The rest of the near-dup and PQ-encode families, measured at sf0.001
+    # before their production and SQL-replayable forms shared one body, so
+    # a body change that adds an exchange fails here by name. Both SimHash
+    # forms read 1 on a fresh plan (the fingerprint agg; the first-matching-
+    # chunk filter needs no distinct exchange) and 2 once the session has
+    # materialized the persisted fingerprints, when formatted explain also
+    # prints their cached build plan (see q15_top_supplier);
+    # test_simhash_candidate_dedup_adds_no_exchange pins the fresh 1.
+    "simhash_prodhash": 2,
+    "simhash_dedup": 2,
+    "ivf_pq_topk": 1,  # anchor-cell join; encode is one map stage
+    "pq_adc_topk": 1,  # per-anchor rank window; ADC scoring is map-only
+    "ivf_pq_topk_kmeans": 1,
+    "pq_adc_topk_kmeans": 1,
+    "pq_recon_kmeans": 0,
+    "opq_pq_recon_kmeans": 0,
 }
 
 
@@ -141,6 +157,21 @@ def test_headline_query_stays_within_shuffle_budget(spark, sf_dir, name):
         f"{name}: {n} shuffles, budget {SHUFFLE_BUDGET[name]} — a new exchange "
         "entered this plan; justify and update the budget or fix the plan"
     )
+
+
+@pytest.mark.parametrize("family", ["XXHASH64", "MD5_60"])
+def test_simhash_candidate_dedup_adds_no_exchange(spark, sf_dir, family):
+    """SimHash's one exchange is the fingerprint aggregate: a pair that
+    shares several chunks is kept from its first matching chunk by a
+    filter, not by a distinct. The registry budgets above read 2 once a
+    session has materialized the persisted fingerprints, so this counts
+    a plan over an input no query caches, for both hash families."""
+    from tlmc_etl_spark.operators import dedup
+    from tlmc_etl_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents").filter("doc_id % 2 = 0")
+    plan = dedup.simhash_near_dupes(docs, "doc_id", "text", 64, 16, getattr(dedup, family))
+    assert _shuffles(plan) == 1
 
 
 # Split budgets for the composed lifecycle: the mid-DAG sink boundary

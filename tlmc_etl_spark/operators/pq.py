@@ -160,15 +160,36 @@ def pq_train_codebooks(emb: DataFrame, id_col: str, vec_col: str) -> np.ndarray:
     return _kmeans_codebooks(training_sample(emb, id_col, vec_col))
 
 
+def _encode_codes(Vn: np.ndarray, cb: np.ndarray, round_d2: bool) -> np.ndarray:
+    """(n, m) nearest-codeword ids of unit rows Vn: per subspace, argmin
+    of d2 = |c|^2 - 2 x·c (|x|^2 is constant per row); ties go to the
+    smallest index (np.argmin == the oracles' (d2 ASC, ci ASC) window).
+
+    `round_d2` ranks round(d2, 6) instead of raw d2 — the SQL-replayable
+    convention: the chosen code then depends only on the 6dp value both
+    engines agree on. The k-means forms and their literal-codebook
+    oracles rank raw d2."""
+    m, _, ds = cb.shape
+    codes = np.empty((len(Vn), m), dtype=np.int32)
+    for s in range(m):
+        d2 = (cb[s] * cb[s]).sum(axis=1)[None, :] - 2.0 * (Vn[:, s * ds : (s + 1) * ds] @ cb[s].T)
+        codes[:, s] = np.argmin(np.round(d2, 6) if round_d2 else d2, axis=1)
+    return codes
+
+
 def pq_encode(
-    emb: DataFrame, id_col: str, vec_col: str, codebooks: np.ndarray
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    codebooks: np.ndarray,
+    round_d2: bool = False,
 ) -> DataFrame:
-    """(id, codes array<int>): nearest centroid id per subspace.
+    """(id, codes array<int>): nearest centroid id per subspace
+    (_encode_codes, raw or 6dp-rounded d2).
 
     One argmin matmul per subspace per Arrow batch; the codebook tensor
     rides a broadcast. Encoding normalizes like training did.
     """
-    m, k, ds = codebooks.shape
     bc = emb.sparkSession.sparkContext.broadcast(codebooks)
 
     def encode(batches):
@@ -176,12 +197,7 @@ def pq_encode(
         for pdf in batches:
             V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for s in range(m):
-                Xs = V[:, s * ds : (s + 1) * ds]
-                C = cb[s]
-                d2 = (C * C).sum(axis=1)[None, :] - 2.0 * (Xs @ C.T)
-                codes[:, s] = np.argmin(d2, axis=1)
+            codes = _encode_codes(V, cb, round_d2)
             yield pd.DataFrame(
                 {id_col: pdf[id_col], "codes": [c.tolist() for c in codes]}
             )
@@ -197,7 +213,6 @@ def pq_reconstruction(
     """(id, recon_cosine): cosine between each unit vector and its PQ
     decode — the per-row lossiness audit (the monitored number a lossy
     index ships with, like the int8 quantizer's rmse_steps)."""
-    m, k, ds = codebooks.shape
     bc = emb.sparkSession.sparkContext.broadcast(codebooks)
 
     def recon(batches):
@@ -205,12 +220,8 @@ def pq_reconstruction(
         for pdf in batches:
             V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            R = np.empty_like(V)
-            for s in range(m):
-                Xs = V[:, s * ds : (s + 1) * ds]
-                C = cb[s]
-                d2 = (C * C).sum(axis=1)[None, :] - 2.0 * (Xs @ C.T)
-                R[:, s * ds : (s + 1) * ds] = C[np.argmin(d2, axis=1)]
+            codes = _encode_codes(V, cb, round_d2=False)
+            R = np.concatenate([cb[s][codes[:, s]] for s in range(len(cb))], axis=1)
             Rn = R / np.clip(np.linalg.norm(R, axis=1, keepdims=True), 1e-12, None)
             cos = (V * Rn).sum(axis=1)
             yield pd.DataFrame({id_col: pdf[id_col], "recon_cosine": np.round(cos, 6)})
@@ -242,7 +253,6 @@ def ivf_pq_topk(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     Mn = training_sample(emb, id_col, vec_col)
     coarse = kmeans_centroids(Mn, IVF_N_CENTROIDS)
     codebooks = _kmeans_codebooks(Mn)
-    ds = codebooks.shape[2]
     bc = spark.sparkContext.broadcast((coarse, codebooks))
 
     def cell_and_code(batches):
@@ -251,11 +261,7 @@ def ivf_pq_topk(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
             V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
             sims = Vn @ C.T
-            codes = np.empty((len(pdf), cb.shape[0]), dtype=np.int32)
-            for s in range(cb.shape[0]):
-                Xs = Vn[:, s * ds : (s + 1) * ds]
-                d2 = (cb[s] * cb[s]).sum(axis=1)[None, :] - 2.0 * (Xs @ cb[s].T)
-                codes[:, s] = np.argmin(d2, axis=1)
+            codes = _encode_codes(Vn, cb, round_d2=False)
             probes = np.argsort(-sims, axis=1)[:, :IVF_N_PROBE]
             yield pd.DataFrame(
                 {
@@ -352,20 +358,6 @@ def _subspace_codebooks(S: np.ndarray) -> np.ndarray:
     return np.stack([S[:n_codes, s * ds : (s + 1) * ds] for s in range(m)])
 
 
-def _encode_rounded(Vn: np.ndarray, cb: np.ndarray) -> np.ndarray:
-    """Round-before-argmin PQ encoding (the xengine convention): the
-    chosen code must depend only on the 6dp d2 value both engines agree
-    on; ties go to the smallest index (np.argmin == the oracle's
-    (d2 ASC, ci ASC) window). Shared by every *_portable PQ operator."""
-    m, _, ds = cb.shape
-    codes = np.empty((len(Vn), m), dtype=np.int32)
-    for s in range(m):
-        Xs = Vn[:, s * ds : (s + 1) * ds]
-        d2 = np.round((cb[s] * cb[s]).sum(axis=1)[None, :] - 2.0 * (Xs @ cb[s].T), 6)
-        codes[:, s] = np.argmin(d2, axis=1)
-    return codes
-
-
 def ivf_pq_topk_portable(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """The full IVF+PQ index shape with BOTH quantizers deterministic
     and SQL-replayable: coarse centroids are the IVF_N_CENTROIDS
@@ -395,7 +387,7 @@ def ivf_pq_topk_portable(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame
             # depend only on 6dp values both engines agree on
             sims = np.round(Vn @ C.T, 6)
             order = np.argsort(-sims, axis=1, kind="stable")
-            codes = _encode_rounded(Vn, cb)
+            codes = _encode_codes(Vn, cb, round_d2=True)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
@@ -489,22 +481,7 @@ def pq_adc_topk_portable(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame
     candidates never decoded); only codebook training differs."""
     S = hash_medoid_centroids(emb, id_col, vec_col, PORTABLE_N_CODES)
     codebooks = _subspace_codebooks(S)
-    bc = emb.sparkSession.sparkContext.broadcast(codebooks)
-
-    def encode(batches):
-        cb = bc.value
-        for pdf in batches:
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            codes = _encode_rounded(V, cb)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "codes": [c.tolist() for c in codes]}
-            )
-
-    codes = emb.select(id_col, vec_col).mapInPandas(
-        encode, schema=f"{id_col} long, codes array<int>"
-    )
-
+    codes = pq_encode(emb, id_col, vec_col, codebooks, round_d2=True)
     return _adc_serve(emb, codes, codebooks, id_col, vec_col, PORTABLE_ADC_N_ANCHORS)
 
 
@@ -526,7 +503,7 @@ def pq_recon_portable(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
         for pdf in batches:
             V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            codes = _encode_rounded(V, cb)
+            codes = _encode_codes(V, cb, round_d2=True)
             num = np.zeros(len(pdf))
             den2 = np.zeros(len(pdf))
             for s in range(m):

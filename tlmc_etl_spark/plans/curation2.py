@@ -221,14 +221,15 @@ FROM cc GROUP BY node ORDER BY doc_id
 
 
 @query("minhash_dedup_clusters", oracle=_MINHASH_CC_XENGINE_ORACLE)
-def minhash_cc_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
+def minhash_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The complete scale-path near-dup clustering pipeline —
     MinHash signatures -> LSH bands -> candidate pairs -> connected
     components -> representative election — as ONE cross-engine
     value-checked row.
 
     minhash_clusters_prodhash (the production xxhash64 form) composes the
-    same two stages but each was previously verified separately (the
+    same two stages — the same minhash_near_dupes body over the XXHASH64
+    family — but each was previously verified separately (the
     portable-hash pair set via the minhash_lsh_dedup primary, the CC collapse via
     doc_dedup_clusters' recursive-CTE oracle); this twin checks their
     COMPOSITION: the oracle recomputes portable signatures, banding,
@@ -236,12 +237,12 @@ def minhash_cc_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a regression anywhere from shingling to label election flips the
     driver row.
     """
-    from tlmc_etl_spark.operators.dedup import minhash_near_dupes_portable
+    from tlmc_etl_spark.operators.dedup import MD5_60, minhash_near_dupes
     from tlmc_etl_spark.operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_near_dupes_portable(
-        docs, "doc_id", "text", n_hashes=16, n_bands=4, threshold=0.25
+    pairs = minhash_near_dupes(
+        docs, "doc_id", "text", n_hashes=16, n_bands=4, threshold=0.25, hashes=MD5_60
     ).select("id_a", "id_b")
     comp = connected_components(docs, pairs, "doc_id", "id_a", "id_b")
     return comp.select(

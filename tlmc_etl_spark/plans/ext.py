@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from tlmc_etl_spark.operators.dedup import minhash_near_dupes, simhash_near_dupes
+from tlmc_etl_spark.operators.dedup import MD5_60, minhash_near_dupes, simhash_near_dupes
 from tlmc_etl_spark.operators.fuzzy import hungarian_match_join
 from tlmc_etl_spark.operators.mirror import lcp_pairing, mirror_dedup
 from tlmc_etl_spark.operators.vectors import (
@@ -31,29 +31,34 @@ from tlmc_etl_spark.sources.tables import load_table, table_row_count
 
 
 @query("minhash_lsh_prodhash")
-def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def minhash_lsh_prodhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-duplicate pairs over documents — the
-    production-hash (xxhash64) variant of `minhash_lsh_dedup`, which is
-    now the portable-hash primary so the driver value-checks the full
-    pipeline via SQL replay; this form keeps the JVM-native hash and is
-    rows/property-tested (identical structure line for line).
+    production-hash (xxhash64) form of the portable-hash primary
+    `minhash_lsh_dedup`, whose SQL replay value-checks the pipeline body
+    both forms run (operators/dedup.minhash_near_dupes); this form keeps
+    the JVM-native hash and is rows/property-tested.
 
     Scale path for ngram_jaccard_pairs (which is its exact oracle at small
     J): 64 xxhash64 permutations, 32 bands × 2 rows, estimate ≥ 0.1.
     """
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_near_dupes(
-        docs, "doc_id", "text", n_hashes=64, n_bands=32, threshold=0.1
-    ).orderBy("id_a", "id_b")
+    return (
+        minhash_near_dupes(docs, "doc_id", "text", n_hashes=64, n_bands=32, threshold=0.1)
+        .select("id_a", "id_b", "est_jaccard")
+        .orderBy("id_a", "id_b")
+    )
 
 
 @query("simhash_prodhash")
-def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def simhash_prodhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (hamming ≤ 16 of 64 bits, chunk-banded) —
-    production-hash (xxhash64) variant of the portable-hash primary
-    `simhash_dedup`."""
+    production-hash (xxhash64) form of the portable-hash primary
+    `simhash_dedup`, over the same operators/dedup.simhash_near_dupes
+    body."""
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_near_dupes(docs, "doc_id", "text", max_hamming=16).orderBy("id_a", "id_b")
+    return simhash_near_dupes(
+        docs, "doc_id", "text", bits=64, max_hamming=16
+    ).orderBy("id_a", "id_b")
 
 
 @query(
@@ -1771,15 +1776,17 @@ def lyrics_heal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("minhash_clusters_prodhash")
-def minhash_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+def minhash_clusters_prodhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path near-dup clustering: MinHash-LSH pairs → connected
     components → representative per cluster.
 
     The 100 TB counterpart of doc_dedup_clusters (which builds the same
     clusters from exact n-gram Jaccard pairs and carries the recursive-CTE
     oracle): pair generation is LSH-banded instead of an inverted-index
-    self-join, the collapse is identical. Differentially covered by the
-    doc_dedup_clusters oracle plus the MinHash estimate gates.
+    self-join, the collapse is identical. Its pair stage is the
+    minhash_near_dupes body that the minhash_dedup_clusters oracle
+    value-checks over the portable hash family; differentially covered by
+    the doc_dedup_clusters oracle plus the MinHash estimate gates.
     """
     from tlmc_etl_spark.operators.graph import connected_components
     from tlmc_etl_spark.sources.tables import load_table as _lt
@@ -1859,23 +1866,21 @@ FROM est WHERE n_agree / 16.0 >= 0.25
 
 
 @query("minhash_lsh_dedup", oracle=_MINHASH_XENGINE_ORACLE)
-def minhash_lsh_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
+def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs, cross-engine oracle form.
 
-    Identical algorithm to minhash_lsh_prodhash (shingle -> 16 permutation
-    min-hashes -> 4x4 banding -> candidate equi-join -> agreement
-    estimate) but over a hash DuckDB can compute bit-identically (60-bit
-    md5 prefix), so the ENTIRE pipeline is value-checked by SQL replay —
-    the production xxhash64 form (minhash_lsh_prodhash) stays rows-only
-    by necessity and shares
-    every line of structure with this one. est_jaccard = n_agree/16 is a
-    dyadic rational: exact in both engines, no rounding games.
+    The same operators/dedup.minhash_near_dupes body as
+    minhash_lsh_prodhash (shingle -> 16 permutation min-hashes -> 4x4
+    banding -> candidate equi-join -> agreement estimate), run over the
+    MD5_60 hash family DuckDB computes bit-identically (60-bit md5
+    prefix), so the ENTIRE pipeline is value-checked by SQL replay; the
+    production xxhash64 form differs only in the hash family it passes.
+    est_jaccard = n_agree/16 is a dyadic rational with at most 4
+    decimals: exact in both engines, so its 4dp rounding changes nothing.
     """
-    from tlmc_etl_spark.operators.dedup import minhash_near_dupes_portable
-
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_near_dupes_portable(
-        docs, "doc_id", "text", n_hashes=16, n_bands=4, threshold=0.25
+    return minhash_near_dupes(
+        docs, "doc_id", "text", n_hashes=16, n_bands=4, threshold=0.25, hashes=MD5_60
     ).orderBy("id_a", "id_b")
 
 
@@ -1908,18 +1913,19 @@ FROM cand WHERE bit_count(xor(fa, fb)) <= 4
 
 
 @query("simhash_dedup", oracle=_SIMHASH_XENGINE_ORACLE)
-def simhash_xengine(spark: SparkSession, sf_dir: str) -> DataFrame:
+def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs, cross-engine oracle form (32-bit
     fingerprint, 4x8-bit pigeonhole chunks, hamming <= 4).
 
-    Same tf-weighted bit-vote as simhash_prodhash but over the portable
-    md5-prefix hash, so DuckDB replays fingerprint -> chunk-band ->
-    hamming exactly and the driver value-checks the whole operator; the
-    production 64-bit xxhash64 form (simhash_prodhash) stays rows-only.
+    The same operators/dedup.simhash_near_dupes body as simhash_prodhash
+    (tf-weighted bit vote, chunk-banded candidates kept from their first
+    matching chunk) over the MD5_60 hash family, so DuckDB replays
+    fingerprint -> chunk-band -> hamming exactly (its DISTINCT yields the
+    same candidate set as the first-match filter) and the driver
+    value-checks the whole operator; the production 64-bit xxhash64 form
+    (simhash_prodhash) stays rows-only.
     """
-    from tlmc_etl_spark.operators.dedup import simhash_near_dupes_portable
-
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_near_dupes_portable(
-        docs, "doc_id", "text", bits=32, max_hamming=4
+    return simhash_near_dupes(
+        docs, "doc_id", "text", bits=32, max_hamming=4, hashes=MD5_60
     ).orderBy("id_a", "id_b")
